@@ -11,8 +11,8 @@ import graft.OracleSql.{euclid2, hav, hlat, hlon, wlat, wlon}
 
 /** Driver contract — one `queries` entry per implemented operator
   * (SURVEY.md §2), each with a DuckDB-equivalent oracle in [[oracleSql]]
-  * where the semantics are SQL-expressible (hash-based ops built on
-  * xxhash64 are rows-only checked).
+  * where the semantics are SQL-expressible (xxhash64-based ops through the
+  * exact XXH64 twins in [[OracleXxh]]).
   */
 object SparkEntry {
 
@@ -568,9 +568,10 @@ object SparkEntry {
     "doc_minhash" -> ((s, d) =>
       Docs.minHashCandidates(Docs.minHashSignature(Tables.documents(s, d)))),
     "doc_minhash_md5" -> ((s, d) =>
-      // the minhash→band→bucket-cap→pair mechanics under an EXACT oracle:
-      // md5-based permutations that DuckDB recomputes bit-identically (the
-      // xxhash64 production path above stays rows-only)
+      // the md5 MinHash family under an EXACT oracle: md5-based
+      // permutations and band hashes, and the per-pair shared-band count
+      // that doc_minhash's distinct pairs do not carry (doc_minhash itself
+      // has an exact XXH64 twin)
       Docs.minHashMd5Candidates(Docs.minHashMd5Signature(Tables.documents(s, d)))),
     "doc_simhash" -> ((s, d) => Docs.simHash(Tables.documents(s, d))),
     "doc_dedup_minhash" -> ((s, d) => {
@@ -584,9 +585,9 @@ object SparkEntry {
           sum("doc_id").as("id_sum"))
     }),
     "doc_simhash_md5" -> ((s, d) =>
-      // sign-sum SimHash mechanics under the EXACT oracle (md5 per-token
-      // hash both engines recompute); doc_simhash above keeps the xxhash64
-      // production kernel (rows-only check)
+      // the 60-bit md5 SimHash kernel under the EXACT oracle (md5 per-token
+      // hash both engines recompute); doc_simhash above pins the xxhash64
+      // production kernel through its exact XXH64 twin
       Docs.simHashMd5(Tables.documents(s, d))),
     "doc_fingerprint" -> ((s, d) =>
       // rolling-hash fingerprint mechanics mod 1e9+7 (DuckDB traps on the
@@ -676,8 +677,8 @@ object SparkEntry {
     }),
     "emb_lsh" -> ((s, d) => {
       val e = Tables.embeddings(s, d)
-      Similarity.lshTopK(e, e.where(col("vec_id") % 100 === 0), dim = 64, bits = 4, k = 5,
-        tables = 8)
+      Similarity.lshTopK(e, e.where(col("vec_id") % 100 === 0),
+        (0 until 8).map(t => Similarity.lcgPlanes(64, 4, t.toLong)), k = 5)
         .select("query_id", "vec_id", "rank")
     }),
     "emb_ivf_fixed" -> ((s, d) => {
@@ -696,8 +697,8 @@ object SparkEntry {
       // rerank → bounded top-k) under the EXACT oracle via integer
       // hyperplanes; emb_lsh above keeps the LCG production planes
       val e = Tables.embeddings(s, d)
-      Similarity.lshTopKFixed(e, e.where(col("vec_id") % 100 === 0),
-        Similarity.fixedIntPlanes(64, 4), k = 3)
+      Similarity.lshTopK(e, e.where(col("vec_id") % 100 === 0),
+        Seq(Similarity.fixedIntPlanes(64, 4)), k = 3)
         .select(col("query_id"), col("vec_id"), col("rank").cast("long").as("rank"))
     }),
     "emb_dedup" -> ((s, d) => {

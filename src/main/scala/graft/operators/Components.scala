@@ -19,11 +19,11 @@ object Components {
 
   /** Adaptive entry point: a small graph (≤ graft.cc.unionFindMaxEdges
     * edges, default 5M — ~320 MB driver heap worst case at ~64 B/edge — AND
-    * ≤ graft.cc.unionFindMaxNodes nodes, default 2·maxEdges: the NODE set is
-    * also collected, and e.g. millions of isolated core points arrive with
-    * few edges, so an edge-only gate would not bound the driver) is solved
-    * by one driver-side union-find pass over a bounded collect; a large one
-    * runs the distributed [[minLabel]] loop. The same adaptive posture as a
+    * ≤ 2·maxEdges nodes: the NODE set is also collected, and e.g. millions
+    * of isolated core points arrive with few edges, so an edge-only gate
+    * would not bound the driver) is solved by one driver-side union-find
+    * pass over a bounded collect; a large one runs the distributed
+    * [[minLabel]] loop. The same adaptive posture as a
     * broadcast-join threshold: near-dup graphs are tiny relative to their
     * corpus, so the common case is one collect instead of O(log diameter)
     * join rounds.
@@ -31,10 +31,7 @@ object Components {
   def assign(nodes: DataFrame, edges: DataFrame, maxIters: Int = 50): DataFrame = {
     val spark = nodes.sparkSession
     val maxEdges = spark.conf.getOption("graft.cc.unionFindMaxEdges")
-      .orElse(spark.conf.getOption("graft.dbscan.unionFindMaxEdges"))
       .map(_.toLong).getOrElse(5_000_000L)
-    val maxNodes = spark.conf.getOption("graft.cc.unionFindMaxNodes")
-      .map(_.toLong).getOrElse(2L * maxEdges)
     // ONE probe job for both branch-decision counts (two separate count()
     // actions doubled the driver-seam job count on every CC call — r5
     // verdict finding #3); both inputs are checkpointed/persisted by every
@@ -45,7 +42,7 @@ object Components {
       .map(r => r.getInt(0) -> r.getLong(1)).toMap
     val nEdges = probe.getOrElse(1, 0L)
     val nNodes = probe.getOrElse(2, 0L)
-    if (nEdges <= maxEdges && nNodes <= maxNodes) {
+    if (nEdges <= maxEdges && nNodes <= 2L * maxEdges) {
       val parent = scala.collection.mutable.HashMap.empty[Long, Long]
       def find(x: Long): Long = {
         var r = x

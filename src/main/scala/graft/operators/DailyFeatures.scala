@@ -111,18 +111,6 @@ object DailyFeatures {
     * always <24 h anyway). The cross-day dependency is a lag over the tiny
     * per-day frame, not the point table.
     */
-  /** Dwell-hours in the user's top-k other clusters per date
-    * (hours_in_top3, gps.py:1449-1456 + hours_in with the top-3 cid list).
-    */
-  def hoursInTopK(points: DataFrame, k: Int = 3, refRounding: Boolean = true): DataFrame = {
-    val top = topClusters(points, k).select("user_id", "cid")
-    points.join(top.withColumn("is_top", lit(true)), Seq("user_id", "cid"), "left")
-      .groupBy("user_id", "date")
-      .agg(maybeRound(
-        coalesce(sum(when(col("is_top"), col("time_delta"))), lit(0L)) / 3600.0,
-        refRounding, 3).as("hours_in_top3"))
-  }
-
   def sleepEstimate(points: DataFrame): DataFrame = sleepEstimate(points, refRounding = false)
 
   def sleepEstimate(points: DataFrame, refRounding: Boolean): DataFrame = {

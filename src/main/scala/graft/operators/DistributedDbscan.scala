@@ -86,16 +86,11 @@ object DistributedDbscan {
         struct(col("a_uid").as("a_uid"), col("uid").as("b_uid"), col("w").as("b_w")),
         struct(col("uid").as("a_uid"), col("a_uid").as("b_uid"), col("a_w").as("b_w")))).as("p"))
       .select(col("p.a_uid").as("a_uid"), col("p.b_uid").as("b_uid"), col("p.b_w").as("b_w"))
-    // pairs feeds three consumers (degree, rep edges, border attach) but is
-    // NOT cached by default: building the columnar cache of the ~|pairs|
-    // frame costs more than three recomputes of the cell-equi join at every
-    // scale tested (the join inputs are the cached `uniq`), and the cache
-    // churn destabilized run times. On a cluster where the upstream scan is
-    // genuinely expensive, flip graft.dbscan.persistPairs=true.
-    val pairsRaw = sameCell.select("a_uid", "b_uid", "b_w").unionByName(cross)
-    val persistPairs = points.sparkSession.conf
-      .getOption("graft.dbscan.persistPairs").exists(_.toBoolean)
-    val pairs = if (persistPairs) pairsRaw.persist(StorageLevel.MEMORY_AND_DISK) else pairsRaw
+    // pairs feeds two consumers (degree, rep edges) but is NOT cached:
+    // building the columnar cache of the ~|pairs| frame costs more than
+    // recomputing the cell-equi join at every scale tested (the join inputs
+    // are the cached `uniq`), and the cache churn destabilized run times
+    val pairs = sameCell.select("a_uid", "b_uid", "b_w").unionByName(cross)
 
     // 2. weighted degree → core coords
     val core = pairs.groupBy("a_uid").agg(sum("b_w").as("deg"))
@@ -185,8 +180,9 @@ object DistributedDbscan {
     val compMinRows = assigned.groupBy("comp").agg(min("uid").as("cmin"))
       .limit(limit).collect()
     require(compMinRows.length <= maxComponents,
-      s"more than graft.dbscan.maxComponents=$maxComponents DBSCAN components" +
-        " — raise the conf (driver heap permitting) or raise minSamples")
+      s"at least ${compMinRows.length} DBSCAN components, more than" +
+        s" graft.dbscan.maxComponents=$maxComponents — raise the conf (driver" +
+        " heap permitting) or raise minSamples")
     val labelPairs = compMinRows.sortBy(_.getLong(1)).zipWithIndex
       .map { case (r, i) => (r.getLong(0), i) }.toSeq
     import spark.implicits._
@@ -203,9 +199,7 @@ object DistributedDbscan {
     // blocking: async drops from a previous invocation were still competing
     // with the next run's cache writes (measured as run-over-run slowdowns
     // in repeated-bench sessions)
-    val cached = if (persistPairs) Seq(uniq, pairs, core, coreEdges, uidRep)
-                 else Seq(uniq, core, coreEdges, uidRep)
-    cached.foreach(_.unpersist(blocking = true))
+    Seq(uniq, core, coreEdges, uidRep).foreach(_.unpersist(blocking = true))
     out
   }
 }

@@ -9,8 +9,9 @@ import org.apache.spark.sql.functions._
   *
   * All hashes are built from `md5`/`crc32`/`xxhash64` built-ins so they are
   * deterministic, portable, and codegen'd (no UDFs). Where the DuckDB oracle
-  * can compute the identical function (md5, arithmetic) the operator is
-  * hash-verified; the rest are covered by ScalaTest fixtures.
+  * can compute the identical function (md5, arithmetic, and Spark's XXH64
+  * via the graft.OracleXxh twin) the operator is hash-verified; the rest
+  * are covered by ScalaTest fixtures.
   */
 object Docs {
 
@@ -145,36 +146,55 @@ object Docs {
     * mega-buckets.
     */
   def minHashCandidates(signatures: DataFrame, bands: Int = 4,
-                        maxBucket: Int = 10000): DataFrame = {
-    // the banded rows feed FOUR consumers (bucket sizes + both sides of the
-    // pair self-join); un-materialized, each consumer re-ran the whole
-    // text→shingle→minhash kernel scan — the expensive pass at corpus
-    // scale. Checkpoint the (doc_id, band_idx, band_hash) frame (tiny:
-    // three ints per band-row, no text) so the kernel runs ONCE
-    // (CLAUDE.md multi-consumer rule; r6 plan showed the signature subtree
-    // duplicated per side).
-    val rows = bandRows(signatures, bands).localCheckpoint(eager = true)
-    val sizes = rows.groupBy("band_idx", "band_hash").agg(count(lit(1)).as("bucket_n"))
-    val ok = rows.join(sizes.where(col("bucket_n") <= maxBucket), Seq("band_idx", "band_hash"))
-      .select("doc_id", "band_idx", "band_hash")
-    ok.as("a").join(ok.as("b"),
-        col("a.band_idx") === col("b.band_idx") &&
-          col("a.band_hash") === col("b.band_hash") &&
-          col("a.doc_id") < col("b.doc_id"))
+                        maxBucket: Int = 10000): DataFrame =
+    pairBuckets(bandRows(signatures, bands), maxBucket)
       .select(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"))
       .distinct()
+
+  /** The `bands` band hashes of a MinHash signature, one EXPLICIT column per
+    * band: xxhash64 over the band's slice of the NumHashes-long signature.
+    * Not a HOF over the signature: an alias referenced once inside a lambda
+    * can be inlined by CollapseProject (re-running MinHashSigExpr per band
+    * element, interpreted), whereas `bands` explicit references of the
+    * expensive alias are never inlined — the signature is computed once per
+    * row. Shared by [[bandRows]] and the streaming near-dedup
+    * (graft.streaming.Streams.nearDedupDocs).
+    */
+  def bandHashes(signature: Column, bands: Int): Column = {
+    require(graft.functions.MinHashImpl.NumHashes % bands == 0, "bands must divide NumHashes")
+    val bandSize = graft.functions.MinHashImpl.NumHashes / bands
+    array((0 until bands).map(b => xxhash64(slice(signature, b * bandSize + 1, bandSize))): _*)
   }
 
   /** (doc_id, band_idx, band_hash) rows — the LSH banding shared by
     * [[minHashCandidates]] and [[cappedBuckets]].
     */
   private def bandRows(signatures: DataFrame, bands: Int): DataFrame =
-    signatures.select(
-      col("doc_id"),
-      posexplode(transform(sequence(lit(0), lit(bands - 1)), b => {
-        val bandSize = floor(size(col("signature")) / bands).cast("int")
-        xxhash64(slice(col("signature"), b * bandSize + 1, bandSize))
-      })).as(Seq("band_idx", "band_hash")))
+    signatures.select(col("doc_id"),
+      posexplode(bandHashes(col("signature"), bands)).as(Seq("band_idx", "band_hash")))
+
+  private def bucketSizes(rows: DataFrame): DataFrame =
+    rows.groupBy("band_idx", "band_hash").agg(count(lit(1)).as("bucket_n"))
+
+  /** The pairing body of both MinHash families: (doc_id, band_idx,
+    * band_hash) rows → the self-join of every bucket of at most `maxBucket`
+    * docs on (band_idx, band_hash) with a.doc_id < b.doc_id, sides aliased
+    * `a` and `b` (one row per shared band). The band rows feed FOUR
+    * consumers (bucket sizes + rows, on both sides of the self-join);
+    * un-materialized, each re-ran the whole text→shingle→minhash kernel
+    * scan — the expensive pass at corpus scale — so the (doc_id, band_idx,
+    * band_hash) frame (tiny: no text) is checkpointed once.
+    */
+  private def pairBuckets(banded: DataFrame, maxBucket: Int): DataFrame = {
+    val rows = banded.localCheckpoint(eager = true)
+    val ok = rows.join(bucketSizes(rows).where(col("bucket_n") <= maxBucket),
+        Seq("band_idx", "band_hash"))
+      .select("doc_id", "band_idx", "band_hash")
+    ok.as("a").join(ok.as("b"),
+      col("a.band_idx") === col("b.band_idx") &&
+        col("a.band_hash") === col("b.band_hash") &&
+        col("a.doc_id") < col("b.doc_id"))
+  }
 
   /** The buckets [[minHashCandidates]] dropped from pairwise enumeration:
     * (band_idx, band_hash, bucket_n) with bucket_n > maxBucket. Members of a
@@ -184,15 +204,13 @@ object Docs {
     */
   def cappedBuckets(signatures: DataFrame, bands: Int = 4,
                     maxBucket: Int = 10000): DataFrame =
-    bandRows(signatures, bands)
-      .groupBy("band_idx", "band_hash").agg(count(lit(1)).as("bucket_n"))
-      .where(col("bucket_n") > maxBucket)
+    bucketSizes(bandRows(signatures, bands)).where(col("bucket_n") > maxBucket)
 
   /** md5-as-integer: first 15 hex chars (60 bits — fits a signed BIGINT in
-    * both engines) of md5, parsed base-16. Portable: DuckDB recomputes it
-    * exactly, so the full minhash→band→bucket→pair mechanics can run under
-    * an exact oracle (the production path keeps the compiled xxhash64
-    * kernel, which DuckDB cannot re-express).
+    * both engines) of md5, parsed base-16. DuckDB recomputes it exactly; the
+    * md5 MinHash family built on it pins the per-pair shared-band count and
+    * the near-dup clustering under the oracle (the xxhash64 production path
+    * has its own exact XXH64 twin, graft.OracleXxh).
     */
   def md5Long(c: Column): Column =
     conv(substring(md5(c.cast("binary")), 1, 15), 16, 10).cast("long")
@@ -232,22 +250,13 @@ object Docs {
     */
   def minHashMd5Candidates(signatures: DataFrame, numHashes: Int = 4,
                            maxBucket: Int = 100): DataFrame = {
-    val bands = numHashes / 2
-    val bandCols = (0 until bands).map { b =>
+    val bandCols = (0 until numHashes / 2).map { b =>
       md5Long(concat_ws(",",
         col(s"mh_${2 * b}").cast("string"), col(s"mh_${2 * b + 1}").cast("string")))
     }
-    // materialized for the same four-consumer reason as [[minHashCandidates]]
     val rows = signatures.select(
       col("doc_id"), posexplode(array(bandCols: _*)).as(Seq("band_idx", "band_hash")))
-      .localCheckpoint(eager = true)
-    val sizes = rows.groupBy("band_idx", "band_hash").agg(count(lit(1)).as("bucket_n"))
-    val ok = rows.join(sizes.where(col("bucket_n") <= maxBucket), Seq("band_idx", "band_hash"))
-      .select("doc_id", "band_idx", "band_hash")
-    ok.as("a").join(ok.as("b"),
-        col("a.band_idx") === col("b.band_idx") &&
-          col("a.band_hash") === col("b.band_hash") &&
-          col("a.doc_id") < col("b.doc_id"))
+    pairBuckets(rows, maxBucket)
       .groupBy(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"))
       .agg(count(lit(1)).as("n_shared_bands"))
   }
@@ -323,7 +332,8 @@ object Docs {
   /** md5-variant SimHash (oracle twin of [[simHash]]): identical
     * tokenize→hash→sign-sum→pack mechanics with the per-token hash swapped
     * to [[md5Long]] (60 bits), so DuckDB recomputes the whole chain exactly.
-    * The xxhash64 path above stays the production kernel (rows-only check).
+    * It pins the 60-bit md5 kernel; the xxhash64 production kernel above is
+    * pinned by its own exact XXH64 twin (graft.OracleXxh).
     */
   def simHashMd5(docs: DataFrame): DataFrame =
     docs.select(col("doc_id"), graft.functions.Text.simHashMd5(col("text")).as("simhash_md5"))

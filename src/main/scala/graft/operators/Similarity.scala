@@ -168,35 +168,57 @@ object Similarity {
     * of corpus size (asserted by a plan test). Same shape in ivfTopK /
     * lshTopK below.
     */
-  def bruteForceTopK(corpus: DataFrame, queries: DataFrame, k: Int): DataFrame = {
-    // norms staged per ROW on each side (guide §1.2): the joined pair then
-    // pays one dot kernel instead of dot + two sumSq folds. Same
-    // sqrt(sumSq) expressions, same multiply/divide order — cosine doubles
-    // bit-identical to the inline form.
-    val scored = corpus
-      .withColumn("__cnrm", l2Norm(col("embedding")))
-      .join(broadcast(queries.select(col("vec_id").as("query_id"), col("embedding").as("q_emb"))
-          .withColumn("__qnrm", l2Norm(col("q_emb")))),
-        col("vec_id") =!= col("query_id"))
+  def bruteForceTopK(corpus: DataFrame, queries: DataFrame, k: Int): DataFrame =
+    probeRerank(corpus, queries, k, probe = None)
+
+  /** The probe-and-rerank body of every cosine top-k here: l2 norms staged
+    * per ROW on each side (guide §1.2: the joined pair then pays one dot
+    * kernel instead of dot + two sumSq folds), the queries broadcast, the
+    * pairs joined — all pairs, or on `probe` = (key name, corpus-side key,
+    * query-side key), each a function of the row's embedding and staged
+    * after the norm, since a key may explode a row into several probes —
+    * then cosine, `dedup` of a pair met in several probes, and row_number
+    * over query_id by (cosine desc, vec_id asc) keeping rank ≤ k. Output:
+    * (query_id, vec_id, rank, cosine).
+    */
+  private def probeRerank(corpus: DataFrame, queries: DataFrame, k: Int,
+                          probe: Option[(String, Column => Column, Column => Column)],
+                          dedup: Boolean = false): DataFrame = {
+    val c = corpus.withColumn("__cnrm", l2Norm(col("embedding")))
+    val q = queries.select(col("vec_id").as("query_id"), col("embedding").as("q_emb"))
+      .withColumn("__qnrm", l2Norm(col("q_emb")))
+    val pairs = probe match {
+      case Some((key, corpusKey, queryKey)) =>
+        c.withColumn(key, corpusKey(col("embedding")))
+          .join(broadcast(q.withColumn(key, queryKey(col("q_emb")))), Seq(key))
+      case None => c.join(broadcast(q))
+    }
+    val scored = pairs
+      .where(col("vec_id") =!= col("query_id"))
       .withColumn("cosine", dot(col("embedding"), col("q_emb")) / (col("__cnrm") * col("__qnrm")))
-    scored
+    // cosine BEFORE the multi-probe dedup (r6): deduping rows that still
+    // carry the two embedding arrays forces first(array) buffers, which are
+    // not hash-aggregable — the plan paid TWO SortAggregates (full sorts of
+    // the array-carrying candidate rows). Scoring first costs one cheap
+    // compiled cosine per collision (a pair's duplicates all score the
+    // SAME double — identical vectors), and the dedup then aggregates a
+    // primitive double: pure HashAggregate, no sort. Rank order unchanged.
+    val unique =
+      if (dedup) scored.select("query_id", "vec_id", "cosine").dropDuplicates("query_id", "vec_id")
+      else scored
+    unique
       .withColumn("rank", row_number().over(
         Window.partitionBy("query_id").orderBy(desc("cosine"), asc("vec_id"))))
       .where(col("rank") <= k)
       .select("query_id", "vec_id", "rank", "cosine")
   }
 
-  /** Random-hyperplane signature: bit b = sign(dot(v, h_b)) where h_b is a
-    * deterministic pseudo-random unit direction derived from (b, dim index,
+  /** Random-hyperplane planes for table `tableSeed`: plane b is a
+    * deterministic pseudo-random direction derived from (b, dim index,
     * table seed) via a fixed LCG — no wall-clock, no Math.random
-    * (resume-safe).
-    */
-  def hyperplaneSignature(emb: Column, dim: Int, bits: Int, tableSeed: Long = 0L): Column =
-    planeSignature(emb, lcgPlanes(dim, bits, tableSeed))
-
-  /** The LCG plane values behind [[hyperplaneSignature]] — exposed so the
-    * DuckDB twin (OracleXxh.embLshSql) embeds the IDENTICAL literals the
-    * Spark plan carries (single source of truth; no RNG on either side).
+    * (resume-safe). The DuckDB twin (OracleXxh.embLshSql) embeds the
+    * IDENTICAL literals the Spark plan carries (single source of truth; no
+    * RNG on either side).
     */
   def lcgPlanes(dim: Int, bits: Int, tableSeed: Long): Seq[Seq[Double]] = {
     def lcg(seed: Long): Long = seed * 6364136223846793005L + 1442695040888963407L
@@ -211,8 +233,8 @@ object Similarity {
   }
 
   /** Signature from EXPLICIT hyperplanes: bit b set iff dot(v, planes(b)) > 0.
-    * [[hyperplaneSignature]] delegates here with LCG planes; the oracle twin
-    * uses [[fixedIntPlanes]] so DuckDB recomputes the signature exactly.
+    * The production tables use [[lcgPlanes]]; the oracle twin uses
+    * [[fixedIntPlanes]] so DuckDB recomputes the signature exactly.
     */
   def planeSignature(emb: Column, planes: Seq[Seq[Double]]): Column = {
     val bitCols: Seq[Column] = planes.zipWithIndex.map { case (p, b) =>
@@ -227,27 +249,6 @@ object Similarity {
     */
   def fixedIntPlanes(dim: Int, bits: Int): Seq[Seq[Double]] =
     (0 until bits).map(b => (0 until dim).map(d => ((b * 53 + d * 29) % 11 - 5).toDouble))
-
-  /** Single-table LSH with explicit hyperplanes — the exact-oracle path of
-    * [[lshTopK]]: identical bucket equi-join + exact rerank + bounded top-k
-    * mechanics, with the signature reproducible bit-for-bit in SQL.
-    */
-  def lshTopKFixed(corpus: DataFrame, queries: DataFrame, planes: Seq[Seq[Double]],
-                   k: Int): DataFrame = {
-    // per-row norm staging — see bruteForceTopK; cosine doubles unchanged
-    val sigC = corpus.withColumn("bucket", planeSignature(col("embedding"), planes))
-      .withColumn("__cnrm", l2Norm(col("embedding")))
-    val sigQ = queries.select(col("vec_id").as("query_id"), col("embedding").as("q_emb"))
-      .withColumn("bucket", planeSignature(col("q_emb"), planes))
-      .withColumn("__qnrm", l2Norm(col("q_emb")))
-    sigC.join(broadcast(sigQ), Seq("bucket"))
-      .where(col("vec_id") =!= col("query_id"))
-      .withColumn("cosine", dot(col("embedding"), col("q_emb")) / (col("__cnrm") * col("__qnrm")))
-      .withColumn("rank", row_number().over(
-        Window.partitionBy("query_id").orderBy(desc("cosine"), asc("vec_id"))))
-      .where(col("rank") <= k)
-      .select("query_id", "vec_id", "rank")
-  }
 
   /** IVF-style ANN: corpus is partitioned into `nCells` Voronoi cells of
     * deterministic pseudo-random centroids (fixed LCG — a stand-in for a
@@ -405,62 +406,32 @@ object Similarity {
   def ivfTopK(corpus: DataFrame, queries: DataFrame, dim: Int, nCells: Int,
               nProbe: Int, k: Int, codebook: Option[Seq[(Int, Seq[Double])]] = None): DataFrame = {
     val cents = codebook.getOrElse(ivfCentroids(dim, nCells))
-    val corpusCells = corpus.withColumn("ivf_cell", ivfCell(col("embedding"), cents))
-      // per-row norm staging — see bruteForceTopK; cosine doubles unchanged
-      .withColumn("__cnrm", l2Norm(col("embedding")))
     // query probes: top nProbe cells by centroid cosine
-    val probeArr = {
+    def probes(q: Column): Column = {
       val scored = cents.map { case (id, v) =>
-        struct(cosine(col("q_emb"), array(v.map(lit): _*)).as("s"), lit(id).as("c")) }
-      slice(reverse(array_sort(array(scored: _*))), 1, nProbe)
+        struct(cosine(q, array(v.map(lit): _*)).as("s"), lit(id).as("c")) }
+      explode(transform(slice(reverse(array_sort(array(scored: _*))), 1, nProbe),
+        p => p.getField("c")))
     }
-    val q = queries.select(col("vec_id").as("query_id"), col("embedding").as("q_emb"))
-      .withColumn("__qnrm", l2Norm(col("q_emb")))
-      .withColumn("ivf_cell", explode(transform(probeArr, p => p.getField("c"))))
-    corpusCells.join(broadcast(q), Seq("ivf_cell"))
-      .where(col("vec_id") =!= col("query_id"))
-      .withColumn("cosine", dot(col("embedding"), col("q_emb")) / (col("__cnrm") * col("__qnrm")))
-      .withColumn("rank", row_number().over(
-        Window.partitionBy("query_id").orderBy(desc("cosine"), asc("vec_id"))))
-      .where(col("rank") <= k)
-      .select("query_id", "vec_id", "rank", "cosine")
+    probeRerank(corpus, queries, k, Some(("ivf_cell", ivfCell(_, cents), probes)))
   }
 
-  /** LSH-bucketed ANN with OR-amplification: `tables` independent
-    * hyperplane tables of `bits` bits each; a candidate collides in ANY
-    * table (recall grows with tables, candidate count stays bucket-bounded).
-    * Every probe is an equi join on (table, bucket) — the scale path
-    * replacing the brute-force cross join — followed by pair dedup and an
-    * exact cosine rerank.
+  /** LSH-bucketed ANN with OR-amplification: one hyperplane table per
+    * element of `tables` (each a list of planes, one signature bit per
+    * plane — [[lcgPlanes]] in production, [[fixedIntPlanes]] for the exact
+    * oracle); a candidate collides in ANY table (recall grows with tables,
+    * candidate count stays bucket-bounded). Every probe is an equi join on
+    * the bucket key — (table, signature) when there are several tables,
+    * exploded one row per table, else the signature itself — the scale path
+    * replacing the brute-force cross join, followed by an exact cosine
+    * rerank. Only several tables dedup pairs that collide more than once.
     */
-  def lshTopK(corpus: DataFrame, queries: DataFrame, dim: Int, bits: Int, k: Int,
-              tables: Int = 1): DataFrame = {
-    def bucketsOf(emb: Column): Column =
-      array((0 until tables).map(t =>
-        struct(lit(t).as("t"), hyperplaneSignature(emb, dim, bits, t.toLong).as("b"))): _*)
-    // per-row norm staging BEFORE the table explode (see bruteForceTopK):
-    // one sumSq fold per vector instead of two per (collision × table) row
-    val sigC = corpus.withColumn("__cnrm", l2Norm(col("embedding")))
-      .withColumn("tb", explode(bucketsOf(col("embedding"))))
-    val sigQ = queries
-      .select(col("vec_id").as("query_id"), col("embedding").as("q_emb"))
-      .withColumn("__qnrm", l2Norm(col("q_emb")))
-      .withColumn("tb", explode(bucketsOf(col("q_emb"))))
-    // cosine BEFORE the multi-table dedup (r6): deduping rows that still
-    // carry the two embedding arrays forces first(array) buffers, which are
-    // not hash-aggregable — the plan paid TWO SortAggregates (full sorts of
-    // the array-carrying candidate rows). Scoring first costs one cheap
-    // compiled cosine per collision (a pair's duplicates all score the
-    // SAME double — identical vectors), and the dedup then aggregates a
-    // primitive double: pure HashAggregate, no sort. Rank order unchanged.
-    sigC.join(broadcast(sigQ), Seq("tb"))
-      .where(col("vec_id") =!= col("query_id"))
-      .withColumn("cosine", dot(col("embedding"), col("q_emb")) / (col("__cnrm") * col("__qnrm")))
-      .select("query_id", "vec_id", "cosine")
-      .dropDuplicates("query_id", "vec_id") // a pair may collide in several tables
-      .withColumn("rank", row_number().over(
-        Window.partitionBy("query_id").orderBy(desc("cosine"), asc("vec_id"))))
-      .where(col("rank") <= k)
-      .select("query_id", "vec_id", "rank", "cosine")
+  def lshTopK(corpus: DataFrame, queries: DataFrame, tables: Seq[Seq[Seq[Double]]],
+              k: Int): DataFrame = {
+    def buckets(emb: Column): Column =
+      if (tables.size == 1) planeSignature(emb, tables.head)
+      else explode(array(tables.zipWithIndex.map { case (planes, t) =>
+        struct(lit(t).as("t"), planeSignature(emb, planes).as("b")) }: _*))
+    probeRerank(corpus, queries, k, Some(("tb", buckets, buckets)), dedup = tables.size > 1)
   }
 }

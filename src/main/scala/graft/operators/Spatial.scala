@@ -179,15 +179,6 @@ object Spatial {
     hit.unionByName(rest, allowMissingColumns = true)
   }
 
-  /** Distance-fence relabel (J4, gscap/gps.py:1124-1130): points within
-    * `fenceMeters` of (centerLat, centerLon) get `label`, else keep cid.
-    */
-  def fenceRelabel(points: DataFrame, centerLat: Column, centerLon: Column,
-                   fenceMeters: Double, label: String): DataFrame =
-    points.withColumn("cid",
-      when(Geo.haversineMeters(centerLat, centerLon, col("lat"), col("lon")) <= fenceMeters, label)
-        .otherwise(col("cid")))
-
   /** Proximity anti-join (J6, gscap/gps.py:1518-1530): keep only points at
     * least `minMeters` from every center in `centers(c_lat, c_lon)`.
     */
@@ -231,15 +222,4 @@ object Spatial {
     saltFact(fact, rowIdCol, salts)
       .join(saltDim(dim, salts), keys :+ "salt")
       .drop("salt")
-
-  /** Raster↔vector tile assignment (J12): point → raster cell at rasterRes →
-    * equi-join raster tiles keyed by cell id. Pure expression + equi join.
-    */
-  def tileAssign(points: DataFrame, raster: DataFrame, pointRes: Int, rasterRes: Int): DataFrame = {
-    val cellCol = Grid.cell(col("lat"), col("lon"), pointRes)
-    points
-      .withColumn("cell", cellCol)
-      .withColumn("tile_id", Grid.toParent(col("cell"), pointRes, rasterRes))
-      .join(broadcast(raster), Seq("tile_id"), "left")
-  }
 }

@@ -26,7 +26,6 @@ object Tables {
   def lineitem(spark: SparkSession, d: String): DataFrame  = table(spark, d, "lineitem")
   def orders(spark: SparkSession, d: String): DataFrame    = table(spark, d, "orders")
   def customer(spark: SparkSession, d: String): DataFrame  = table(spark, d, "customer")
-  def supplier(spark: SparkSession, d: String): DataFrame  = table(spark, d, "supplier")
   def part(spark: SparkSession, d: String): DataFrame      = table(spark, d, "part")
   def nation(spark: SparkSession, d: String): DataFrame    = table(spark, d, "nation")
   def region(spark: SparkSession, d: String): DataFrame    = table(spark, d, "region")

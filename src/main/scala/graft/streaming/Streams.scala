@@ -76,19 +76,13 @@ object Streams {
   def nearDedupDocs(stream: DataFrame, bands: Int = 4,
                     watermark: String = "10 minutes",
                     window_ : String = "1 minute"): DataFrame = {
-    require(graft.functions.MinHashImpl.NumHashes % bands == 0, "bands must divide NumHashes")
-    val bandSize = graft.functions.MinHashImpl.NumHashes / bands
-    // band hashes as `bands` EXPLICIT columns, not a HOF over a staged
-    // signature: an alias referenced once inside a lambda can be inlined by
-    // CollapseProject (re-running MinHashSigExpr per band element), whereas
-    // `bands` explicit references of the expensive alias are never inlined —
-    // the signature is computed exactly once per row
+    // the batch banding (Docs.bandHashes): the signature is computed once
+    // per row and split into `bands` explicit band-hash columns
     val banded = stream
       .select(col("doc_id"), col("ts"), col("text"),
         graft.functions.MinHashSigExpr(col("text")).as("signature"))
       .select(col("doc_id"), col("ts"), col("text"),
-        posexplode(array((0 until bands).map(b =>
-          xxhash64(slice(col("signature"), b * bandSize + 1, bandSize))): _*))
+        posexplode(graft.operators.Docs.bandHashes(col("signature"), bands))
           .as(Seq("band_idx", "band_hash")))
       // the text payload rides ONLY the band-0 row (not ×bands through the
       // shuffle): a kept doc by definition kept ALL its band rows, so its

@@ -133,7 +133,7 @@ class ClusteringSpec extends SparkSpec {
     val pts = chain.toArray
     val exact = Dbscan.run(pts, 0.005, 20)
     val df = pts.zipWithIndex.map { case ((la, lo), i) => (i.toLong, la, lo) }.toSeq.toDF("id", "lat", "lon")
-    spark.conf.set("graft.dbscan.unionFindMaxEdges", "0")
+    spark.conf.set("graft.cc.unionFindMaxEdges", "0")
     try {
       val dist = DistributedDbscan.run(df, 0.005, 20).collect()
         .map(r => r.getLong(0).toInt -> r.getInt(1)).toMap
@@ -141,7 +141,7 @@ class ClusteringSpec extends SparkSpec {
       val distGroups  = pts.indices.filter(dist(_) != -1).groupBy(dist(_)).values.map(_.toSet).toSet
       assert(exactGroups === distGroups)
       assert(distGroups.size === 1) // the whole chain is one component
-    } finally spark.conf.unset("graft.dbscan.unionFindMaxEdges")
+    } finally spark.conf.unset("graft.cc.unionFindMaxEdges")
   }
 
   test("distributed DBSCAN component budget: over-budget fails, at-budget passes (r6 single-collect guard)") {
@@ -158,6 +158,9 @@ class ClusteringSpec extends SparkSpec {
     try {
       val e = intercept[IllegalArgumentException] { DistributedDbscan.run(df, 0.005, 20).collect() }
       assert(e.getMessage.contains("maxComponents"))
+      // the capped collect stops at maxComponents+1 rows: that is the count
+      // the message can report
+      assert(e.getMessage.contains("at least 3 DBSCAN components"), e.getMessage)
       spark.conf.set("graft.dbscan.maxComponents", "3")
       val labels = DistributedDbscan.run(df, 0.005, 20).collect().map(_.getInt(1)).toSet
       assert(labels === Set(0, 1, 2))

@@ -54,6 +54,10 @@ class DocsSpec extends SparkSpec {
     val none = Docs.minHashCandidates(Docs.minHashSignature(docs), maxBucket = 1)
       .as[(Long, Long)].collect()
     assert(none.isEmpty)
+    // the same cap on the md5 family's band hashes
+    assert(Docs.minHashMd5Candidates(Docs.minHashMd5Signature(docs), maxBucket = 1).isEmpty)
+    assert(Docs.minHashMd5Candidates(Docs.minHashMd5Signature(docs), maxBucket = 2)
+      .as[(Long, Long, Long)].collect().contains((1L, 4L, 2L)))
   }
 
   test("simhash: identical docs get identical hashes, near-dups small hamming distance") {
@@ -158,6 +162,12 @@ class DocsSpec extends SparkSpec {
     capped.foreach(r => assert(r.getAs[Long]("bucket_n") === 5L))
     // and with the cap above the bucket size the pairs reappear
     assert(Docs.minHashCandidates(sigs, maxBucket = 10).count() === 10L) // C(5,2)
+    // one cap for both hash families: the md5 bands of the same docs obey it
+    val md5Sigs = Docs.minHashMd5Signature(d)
+    assert(Docs.minHashMd5Candidates(md5Sigs, maxBucket = 4).count() === 0L)
+    val md5Pairs = Docs.minHashMd5Candidates(md5Sigs, maxBucket = 5).collect()
+    assert(md5Pairs.length === 10) // C(5,2), each sharing both md5 bands
+    md5Pairs.foreach(r => assert(r.getAs[Long]("n_shared_bands") === 2L))
   }
 
   test("filterPipeline: dedup, gates and language argmax compose end-to-end") {

@@ -35,4 +35,15 @@ class PlanShapeSpec extends SparkSpec {
     assert(!plan.contains("CartesianProduct"), plan)
     assert(plan.contains("HashAggregate"), plan)
   }
+
+  test("emb_lsh_fixed: one hyperplane table plans no pair dedup aggregate") {
+    // a pair can collide in several tables only when there are several:
+    // the single-table query must not pay the dedup HashAggregate that the
+    // eight-table emb_lsh does
+    val fixed = planOf("emb_lsh_fixed")
+    assert(!fixed.contains("HashAggregate"), fixed)
+    assert(!fixed.contains("Generate"), fixed)
+    val multi = planOf("emb_lsh")
+    assert(multi.contains("HashAggregate"), multi)
+  }
 }

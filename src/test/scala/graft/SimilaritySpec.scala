@@ -70,7 +70,7 @@ class SimilaritySpec extends SparkSpec {
     val buckets = e.select(col("vec_id"),
       Similarity.planeSignature(col("embedding"), planes).as("b"))
       .collect().map(r => (r.getLong(0), r.getLong(1))).toMap
-    val lsh = Similarity.lshTopKFixed(e, q, planes, k = 3).collect()
+    val lsh = Similarity.lshTopK(e, q, Seq(planes), k = 3).collect()
     assert(lsh.nonEmpty)
     lsh.foreach { r =>
       assert(buckets(r.getAs[Long]("query_id")) === buckets(r.getAs[Long]("vec_id")))
@@ -142,7 +142,8 @@ class SimilaritySpec extends SparkSpec {
     // short 4-bit signatures + OR over 8 tables trade candidate volume for
     // recall — the banding knob, same as MinHash-LSH
     def recall(tables: Int): Double = {
-      val got = Similarity.lshTopK(e, q, dim = 64, bits = 4, k = 5, tables)
+      val got = Similarity.lshTopK(e, q,
+        (0 until tables).map(t => Similarity.lcgPlanes(64, 4, t.toLong)), k = 5)
         .select("query_id", "vec_id").collect().map(r => (r.getLong(0), r.getLong(1))).toSet
       (brute & got).size.toDouble / brute.size
     }
@@ -155,7 +156,8 @@ class SimilaritySpec extends SparkSpec {
   test("LSH buckets identical vectors together") {
     val corpus = Seq((1L, vec(1, 0, 0, 0)), (2L, vec(1, 0, 0, 0)), (3L, vec(-1, 0, 0, 0)))
       .toDF("vec_id", "embedding")
-    val sigs = corpus.withColumn("b", Similarity.hyperplaneSignature(col("embedding"), 4, 8))
+    val sigs = corpus.withColumn("b", Similarity.planeSignature(col("embedding"),
+      Similarity.lcgPlanes(4, 8, 0L)))
       .select("vec_id", "b").collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(sigs(1L) === sigs(2L))
     assert(sigs(1L) !== sigs(3L))
