@@ -602,7 +602,8 @@ object SparkEntry {
       // shingling per side
       val sigs = Docs.minHashSignature(docs).localCheckpoint()
       val cand = Docs.minHashCandidates(sigs)
-      val sh = docs.select(col("doc_id"), Docs.shingles(col("text"), 3).as("sh")).localCheckpoint()
+      val sh = docs.select(col("doc_id"), Docs.shingles(col("text"), Docs.DefaultShingleSize).as("sh"))
+        .localCheckpoint()
       // jaccard stays a RAW double (exact int counts, one IEEE division —
       // bit-identical cross-engine; a bround could land on a rounding tie)
       Docs.jaccardFromShingles(sh, cand)
@@ -624,7 +625,7 @@ object SparkEntry {
       // materialize the shingle frame consumed by BOTH pair sides
       // (jaccardFromShingles' documented contract; the doc_jaccard pattern)
       // so the compiled shingle kernel scans the corpus once, not per side
-      val sh = docs.select(col("doc_id"), Docs.shingles(col("text"), 3).as("sh"))
+      val sh = docs.select(col("doc_id"), Docs.shingles(col("text"), Docs.DefaultShingleSize).as("sh"))
         .localCheckpoint()
       Docs.jaccardFromShingles(sh, pairs)
     }),

@@ -3,9 +3,8 @@ package graft.functions
 import java.nio.charset.StandardCharsets
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.types.{BinaryType, DataType, StringType}
+import org.apache.spark.sql.graft.ColumnBridge
+import org.apache.spark.sql.types.StringType
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Single-pass implementation of the frozen H12 text extractor.
@@ -115,27 +114,10 @@ object ExtractTextImpl {
     UTF8String.fromString(extractString(new String(bytes, StandardCharsets.UTF_8)))
 }
 
-/** Catalyst expression wrapper: codegen emits a direct static call, keeping
-  * the extractor inside whole-stage codegen (SURVEY.md §2 J policy: native
-  * Expression over UDF).
+/** html binary → extracted text; generated code calls
+  * [[ExtractTextImpl.extract]] directly, keeping the extractor inside
+  * whole-stage codegen (SURVEY.md §2 J policy: compiled kernel, not a UDF).
   */
-case class ExtractTextExpr(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = StringType
-  override def nullIntolerant: Boolean = true
-  override def prettyName: String = "extract_text"
-
-  protected override def nullSafeEval(input: Any): Any =
-    ExtractTextImpl.extract(input.asInstanceOf[Array[Byte]])
-
-  protected override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.ExtractTextImpl.extract($c)")
-
-  protected override def withNewChildInternal(newChild: Expression): ExtractTextExpr =
-    copy(child = newChild)
-}
-
 object ExtractTextExpr {
-  import org.apache.spark.sql.graft.ColumnBridge
-  def apply(c: Column): Column =
-    ColumnBridge.column(ExtractTextExpr(ColumnBridge.expression(c)))
+  def apply(c: Column): Column = ColumnBridge.invoke(ExtractTextImpl, "extract", StringType, c)
 }

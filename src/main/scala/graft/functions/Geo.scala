@@ -2,6 +2,8 @@ package graft.functions
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.ColumnBridge
+import org.apache.spark.sql.types.{ArrayType, LongType}
 
 /** Geospatial column expressions — pure `Column` compositions (whole-stage
   * codegen'd, no UDFs anywhere in the hot path).
@@ -72,8 +74,14 @@ object NpRound {
   */
 object Grid {
 
-  /** Encode (lat, lon) → S2 cell id at `res` (level). Native codegen expr. */
-  def cell(lat: Column, lon: Column, res: Int): Column = S2CellIdExpr(lat, lon, res)
+  /** Encode (lat, lon) → S2 cell id at `res` (level): one compiled
+    * [[S2.cellId]] call per row (the Column-algebra formulation would
+    * rebuild the Hilbert chain as ~16 chained CASE trees).
+    */
+  def cell(lat: Column, lon: Column, res: Int): Column = {
+    require(res >= 0 && res <= S2.MaxLevel, s"level out of range: $res")
+    ColumnBridge.invoke(S2, "cellId", LongType, lat.cast("double"), lon.cast("double"), lit(res))
+  }
 
   /** Parent cell at a coarser level — pure bit ops ((id & −lsb) | lsb),
     * exact by the Hilbert prefix property (equals encoding directly at
@@ -87,9 +95,10 @@ object Grid {
 
   /** k-ring: all cells within k ij-steps (a guaranteed superset of the BFS
     * ball, incl. across cube-face edges/corners — see [[S2.ringCells]]).
-    * The level is read from the id; `resolution` is kept for API parity.
+    * The level is read from the id.
     */
-  def kRing(cellCol: Column, resolution: Int, k: Int): Column = S2RingExpr(cellCol, k)
+  def kRing(cellCol: Column, k: Int): Column =
+    ColumnBridge.invoke(S2, "ringArray", ArrayType(LongType, containsNull = false), cellCol, lit(k))
 
   /** Scala-side encode (driver/test use; same codec as `cell`). */
   def cellId(lat: Double, lon: Double, res: Int): Long = S2.cellId(lat, lon, res)

@@ -5,8 +5,7 @@ import java.util.zip.{CRC32, Deflater, Inflater}
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{Expression, QuaternaryExpression, TernaryExpression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.graft.ColumnBridge.invoke
 import org.apache.spark.sql.types._
 
 /** REAL pixel/sample codecs for the multimodal pipeline — no codec jars
@@ -408,137 +407,32 @@ object MediaImpl {
 }
 
 /** (w, h, seed) → real PNG bytes. */
-case class PngImageExpr(wE: Expression, hE: Expression, seedE: Expression) extends TernaryExpression {
-  override def first: Expression = wE
-  override def second: Expression = hE
-  override def third: Expression = seedE
-  override def dataType: DataType = BinaryType
-  override def nullIntolerant: Boolean = true
-  override def prettyName: String = "png_image"
-
-  protected override def nullSafeEval(w: Any, h: Any, s: Any): Any =
-    MediaImpl.pngEncode(w.asInstanceOf[Int], h.asInstanceOf[Int], s.asInstanceOf[Long])
-
-  protected override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (w, h, s) => s"graft.functions.MediaImpl.pngEncode($w, $h, $s)")
-
-  protected override def withNewChildrenInternal(f: Expression, s: Expression, t: Expression): PngImageExpr =
-    copy(wE = f, hE = s, seedE = t)
-}
-
 object PngImageExpr {
-  import org.apache.spark.sql.graft.ColumnBridge
   def apply(w: Column, h: Column, seed: Column): Column =
-    ColumnBridge.column(PngImageExpr(
-      ColumnBridge.expression(w.cast("int")),
-      ColumnBridge.expression(h.cast("int")),
-      ColumnBridge.expression(seed.cast("long"))))
+    invoke(MediaImpl, "pngEncode", BinaryType, w.cast("int"), h.cast("int"), seed.cast("long"))
 }
 
 /** (sampleRate, channels, nFrames, seed) → real PCM WAV bytes. */
-case class WavAudioExpr(srE: Expression, chE: Expression, nE: Expression, seedE: Expression)
-    extends QuaternaryExpression {
-  override def first: Expression = srE
-  override def second: Expression = chE
-  override def third: Expression = nE
-  override def fourth: Expression = seedE
-  override def dataType: DataType = BinaryType
-  override def nullIntolerant: Boolean = true
-  override def prettyName: String = "wav_audio"
-
-  protected override def nullSafeEval(sr: Any, ch: Any, n: Any, s: Any): Any =
-    MediaImpl.wavEncode(sr.asInstanceOf[Int], ch.asInstanceOf[Int],
-      n.asInstanceOf[Int], s.asInstanceOf[Long])
-
-  protected override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (sr, ch, n, s) => s"graft.functions.MediaImpl.wavEncode($sr, $ch, $n, $s)")
-
-  protected override def withNewChildrenInternal(f: Expression, s: Expression, t: Expression, q: Expression): WavAudioExpr =
-    copy(srE = f, chE = s, nE = t, seedE = q)
-}
-
 object WavAudioExpr {
-  import org.apache.spark.sql.graft.ColumnBridge
   def apply(sr: Column, ch: Column, nFrames: Column, seed: Column): Column =
-    ColumnBridge.column(WavAudioExpr(
-      ColumnBridge.expression(sr.cast("int")), ColumnBridge.expression(ch.cast("int")),
-      ColumnBridge.expression(nFrames.cast("int")), ColumnBridge.expression(seed.cast("long"))))
+    invoke(MediaImpl, "wavEncode", BinaryType,
+      sr.cast("int"), ch.cast("int"), nFrames.cast("int"), seed.cast("long"))
 }
 
 /** (w, h, seed) → real PNG bytes with the linear oracle-twin pixel pattern. */
-case class PngImageLinExpr(wE: Expression, hE: Expression, seedE: Expression) extends TernaryExpression {
-  override def first: Expression = wE
-  override def second: Expression = hE
-  override def third: Expression = seedE
-  override def dataType: DataType = BinaryType
-  override def nullIntolerant: Boolean = true
-  override def prettyName: String = "png_image_lin"
-
-  protected override def nullSafeEval(w: Any, h: Any, s: Any): Any =
-    MediaImpl.pngEncodeLin(w.asInstanceOf[Int], h.asInstanceOf[Int], s.asInstanceOf[Long])
-
-  protected override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (w, h, s) => s"graft.functions.MediaImpl.pngEncodeLin($w, $h, $s)")
-
-  protected override def withNewChildrenInternal(f: Expression, s: Expression, t: Expression): PngImageLinExpr =
-    copy(wE = f, hE = s, seedE = t)
-}
-
 object PngImageLinExpr {
-  import org.apache.spark.sql.graft.ColumnBridge
   def apply(w: Column, h: Column, seed: Column): Column =
-    ColumnBridge.column(PngImageLinExpr(
-      ColumnBridge.expression(w.cast("int")),
-      ColumnBridge.expression(h.cast("int")),
-      ColumnBridge.expression(seed.cast("long"))))
+    invoke(MediaImpl, "pngEncodeLin", BinaryType, w.cast("int"), h.cast("int"), seed.cast("long"))
 }
 
 /** (sampleRate, channels, nFrames, seed) → real WAV bytes, linear samples. */
-case class WavAudioLinExpr(srE: Expression, chE: Expression, nE: Expression, seedE: Expression)
-    extends QuaternaryExpression {
-  override def first: Expression = srE
-  override def second: Expression = chE
-  override def third: Expression = nE
-  override def fourth: Expression = seedE
-  override def dataType: DataType = BinaryType
-  override def nullIntolerant: Boolean = true
-  override def prettyName: String = "wav_audio_lin"
-
-  protected override def nullSafeEval(sr: Any, ch: Any, n: Any, s: Any): Any =
-    MediaImpl.wavEncodeLin(sr.asInstanceOf[Int], ch.asInstanceOf[Int],
-      n.asInstanceOf[Int], s.asInstanceOf[Long])
-
-  protected override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (sr, ch, n, s) => s"graft.functions.MediaImpl.wavEncodeLin($sr, $ch, $n, $s)")
-
-  protected override def withNewChildrenInternal(f: Expression, s: Expression, t: Expression, q: Expression): WavAudioLinExpr =
-    copy(srE = f, chE = s, nE = t, seedE = q)
-}
-
 object WavAudioLinExpr {
-  import org.apache.spark.sql.graft.ColumnBridge
   def apply(sr: Column, ch: Column, nFrames: Column, seed: Column): Column =
-    ColumnBridge.column(WavAudioLinExpr(
-      ColumnBridge.expression(sr.cast("int")), ColumnBridge.expression(ch.cast("int")),
-      ColumnBridge.expression(nFrames.cast("int")), ColumnBridge.expression(seed.cast("long"))))
+    invoke(MediaImpl, "wavEncodeLin", BinaryType,
+      sr.cast("int"), ch.cast("int"), nFrames.cast("int"), seed.cast("long"))
 }
 
 /** PNG payload → decoded-pixel stats struct (inflate + unfilter + pool). */
-case class PngStatsExpr(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = PngStatsExpr.schema
-  override def nullIntolerant: Boolean = true
-  override def prettyName: String = "png_pixel_stats"
-
-  protected override def nullSafeEval(input: Any): Any =
-    MediaImpl.pngStats(input.asInstanceOf[Array[Byte]])
-
-  protected override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.MediaImpl.pngStats($c)")
-
-  protected override def withNewChildInternal(newChild: Expression): PngStatsExpr =
-    copy(child = newChild)
-}
-
 object PngStatsExpr {
   val schema: StructType = StructType(Seq(
     StructField("ok", BooleanType, nullable = false),
@@ -549,27 +443,10 @@ object PngStatsExpr {
     StructField("sum_b", LongType, nullable = false),
     StructField("sum_a", LongType, nullable = false),
     StructField("thumb", BinaryType, nullable = false)))
-  import org.apache.spark.sql.graft.ColumnBridge
-  def apply(payload: Column): Column =
-    ColumnBridge.column(PngStatsExpr(ColumnBridge.expression(payload)))
+  def apply(payload: Column): Column = invoke(MediaImpl, "pngStats", schema, payload)
 }
 
 /** WAV payload → decoded-sample stats struct (RIFF walk + LE PCM math). */
-case class WavStatsExpr(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = WavStatsExpr.schema
-  override def nullIntolerant: Boolean = true
-  override def prettyName: String = "wav_pcm_stats"
-
-  protected override def nullSafeEval(input: Any): Any =
-    MediaImpl.wavStats(input.asInstanceOf[Array[Byte]])
-
-  protected override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.MediaImpl.wavStats($c)")
-
-  protected override def withNewChildInternal(newChild: Expression): WavStatsExpr =
-    copy(child = newChild)
-}
-
 object WavStatsExpr {
   val schema: StructType = StructType(Seq(
     StructField("ok", BooleanType, nullable = false),
@@ -577,7 +454,5 @@ object WavStatsExpr {
     StructField("sum_abs", LongType, nullable = false),
     StructField("peak", IntegerType, nullable = false),
     StructField("waveform", BinaryType, nullable = false)))
-  import org.apache.spark.sql.graft.ColumnBridge
-  def apply(payload: Column): Column =
-    ColumnBridge.column(WavStatsExpr(ColumnBridge.expression(payload)))
+  def apply(payload: Column): Column = invoke(MediaImpl, "wavStats", schema, payload)
 }

@@ -1,10 +1,9 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
-import org.apache.spark.sql.types.{ArrayType, DataType, LongType}
+import org.apache.spark.sql.graft.ColumnBridge
+import org.apache.spark.sql.types.{ArrayType, LongType}
 import org.apache.spark.sql.catalyst.expressions.XXH64
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -14,8 +13,8 @@ import org.apache.spark.unsafe.types.UTF8String
   * The Column-HOF formulation (transform/aggregate over arrays) evaluates
   * interpreted per element — ~2 µs per hash call; this kernel runs the whole
   * tokenize→shingle-hash→permute pipeline in compiled Scala using Spark's
-  * own XXH64, invoked from generated code (same policy as ExtractTextExpr:
-  * custom Expression with doGenCode, never a UDF).
+  * own XXH64, called directly from generated code (it enters the plan
+  * through `ColumnBridge.invoke`, like every compiled kernel; never a UDF).
   *
   * Hash scheme (engine-internal, consistent-only contract):
   *   token hash   h_t   = XXH64(utf8 bytes, seed 42)
@@ -76,23 +75,8 @@ object MinHashImpl {
   }
 }
 
-case class MinHashSigExpr(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def nullIntolerant: Boolean = true
-  override def prettyName: String = "minhash_signature"
-
-  protected override def nullSafeEval(input: Any): Any =
-    MinHashImpl.signature(input.asInstanceOf[UTF8String])
-
-  protected override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.MinHashImpl.signature($c)")
-
-  protected override def withNewChildInternal(newChild: Expression): MinHashSigExpr =
-    copy(child = newChild)
-}
-
+/** text → array<long> MinHash signature ([[MinHashImpl.signature]]). */
 object MinHashSigExpr {
-  import org.apache.spark.sql.graft.ColumnBridge
   def apply(c: Column): Column =
-    ColumnBridge.column(MinHashSigExpr(ColumnBridge.expression(c)))
+    ColumnBridge.invoke(MinHashImpl, "signature", ArrayType(LongType, containsNull = false), c)
 }

@@ -1,10 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
-import org.apache.spark.sql.types.{ArrayType, DataType, LongType}
 
 /** S2 cell geometry — the real equal-area hierarchical index behind the
   * engine's Grid API (SURVEY.md §1 names H3/S2; the north rule requires it).
@@ -270,58 +266,6 @@ object S2 {
     arr
   }
 
-  /** codegen bridge returning Spark ArrayData. */
+  /** [[ringCells]] as Spark ArrayData, the kernel behind Grid.kRing. */
   def ringArray(id: Long, k: Int): ArrayData = new GenericArrayData(ringCells(id, k))
-}
-
-/** (lat°, lon°) → S2 cell id at a literal level — a native codegen'd
-  * Catalyst expression (one tight compiled loop per row; the Column-algebra
-  * formulation would rebuild the Hilbert chain as ~16 chained CASE trees).
-  */
-case class S2CellIdExpr(latE: Expression, lonE: Expression, lvl: Int) extends BinaryExpression {
-  require(lvl >= 0 && lvl <= S2.MaxLevel, s"level out of range: $lvl")
-  override def left: Expression = latE
-  override def right: Expression = lonE
-  override def dataType: DataType = LongType
-  override def nullIntolerant: Boolean = true
-  override def prettyName: String = "s2_cell_id"
-
-  protected override def nullSafeEval(lat: Any, lon: Any): Any =
-    S2.cellId(lat.asInstanceOf[Double], lon.asInstanceOf[Double], lvl)
-
-  protected override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (la, lo) => s"graft.functions.S2.cellId($la, $lo, $lvl)")
-
-  protected override def withNewChildrenInternal(newLeft: Expression, newRight: Expression): S2CellIdExpr =
-    copy(latE = newLeft, lonE = newRight)
-}
-
-object S2CellIdExpr {
-  import org.apache.spark.sql.graft.ColumnBridge
-  def apply(lat: Column, lon: Column, level: Int): Column =
-    ColumnBridge.column(S2CellIdExpr(
-      ColumnBridge.expression(lat.cast("double")),
-      ColumnBridge.expression(lon.cast("double")), level))
-}
-
-/** cell id → array of ring cells (S2.ringCells) at a literal k. */
-case class S2RingExpr(child: Expression, k: Int) extends UnaryExpression {
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def nullIntolerant: Boolean = true
-  override def prettyName: String = "s2_ring"
-
-  protected override def nullSafeEval(input: Any): Any =
-    S2.ringArray(input.asInstanceOf[Long], k)
-
-  protected override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.S2.ringArray($c, $k)")
-
-  protected override def withNewChildInternal(newChild: Expression): S2RingExpr =
-    copy(child = newChild)
-}
-
-object S2RingExpr {
-  import org.apache.spark.sql.graft.ColumnBridge
-  def apply(cell: Column, k: Int): Column =
-    ColumnBridge.column(S2RingExpr(ColumnBridge.expression(cell), k))
 }

@@ -5,8 +5,6 @@ import java.security.MessageDigest
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
@@ -18,8 +16,8 @@ import org.apache.spark.unsafe.types.UTF8String
   * interpreted with one boxed value per element per row — the same failure
   * mode measured at 4-10× on the cosine path and fixed by [[VecImpl]]. These
   * kernels run the identical tokenize→hash→fold pipelines as tight compiled
-  * loops invoked from generated code (policy: custom Expression with
-  * doGenCode, never a UDF).
+  * loops, called directly from generated code (they enter the plan through
+  * `ColumnBridge.invoke`, never as a UDF).
   *
   * EXACTNESS CONTRACT — every function here is a bit-identical twin of the
   * Column-expression formulation it replaces (pinned in TextKernelSpec
@@ -325,199 +323,55 @@ object TextImpl {
   }
 }
 
-/** text → array<string> of distinct n-token shingles. */
-case class ShinglesExpr(child: Expression, n: Int) extends UnaryExpression {
-  override def dataType: DataType = ArrayType(StringType, containsNull = false)
-  override def nullIntolerant: Boolean = true
-  override def prettyName: String = "text_shingles"
+/** Column-level entry points for the compiled text kernels. */
+object Text {
+  import org.apache.spark.sql.functions.lit
+  import org.apache.spark.sql.graft.ColumnBridge.invoke
 
-  protected override def nullSafeEval(input: Any): Any =
-    TextImpl.shingles(input.asInstanceOf[UTF8String], n)
+  /** text → array<string> of distinct n-token shingles. */
+  def shingles(text: Column, n: Int): Column =
+    invoke(TextImpl, "shingles", ArrayType(StringType, containsNull = false), text, lit(n))
 
-  protected override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.TextImpl.shingles($c, $n)")
+  /** (array<string>, array<string>) → set Jaccard similarity. */
+  def jaccard(a: Column, b: Column): Column =
+    invoke(TextImpl, "jaccard", DoubleType, a, b)
 
-  protected override def withNewChildInternal(newChild: Expression): ShinglesExpr =
-    copy(child = newChild)
-}
+  /** text → array<long> md5-permutation MinHash signature. */
+  def minHashMd5(text: Column, numHashes: Int): Column =
+    invoke(TextImpl, "minHashMd5", ArrayType(LongType, containsNull = false), text, lit(numHashes))
 
-/** (array<string>, array<string>) → set Jaccard similarity. */
-case class JaccardExpr(l: Expression, r: Expression) extends BinaryExpression {
-  override def left: Expression = l
-  override def right: Expression = r
-  override def dataType: DataType = DoubleType
-  override def nullIntolerant: Boolean = true
-  override def prettyName: String = "set_jaccard"
+  /** text → 60-bit md5 SimHash. */
+  def simHashMd5(text: Column): Column = invoke(TextImpl, "simHashMd5", LongType, text)
 
-  protected override def nullSafeEval(a: Any, b: Any): Any =
-    TextImpl.jaccard(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
+  /** text → 64-bit xxhash64 SimHash (the production variant). */
+  def simHashXx(text: Column): Column = invoke(TextImpl, "simHashXx", LongType, text)
 
-  protected override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (a, b) => s"graft.functions.TextImpl.jaccard($a, $b)")
+  /** text → wrapping-Long base-31 rolling fingerprint. */
+  def fingerprintWrap(text: Column): Column = invoke(TextImpl, "fingerprintWrap", LongType, text)
 
-  protected override def withNewChildrenInternal(nl: Expression, nr: Expression): JaccardExpr =
-    copy(l = nl, r = nr)
-}
+  /** text → mod-p base-31 rolling fingerprint (the oracle twin). */
+  def fingerprintMod(text: Column, p: Long): Column =
+    invoke(TextImpl, "fingerprintMod", LongType, text, lit(p))
 
-/** text → array<long> md5-permutation MinHash signature. */
-case class MinHashMd5Expr(child: Expression, numHashes: Int) extends UnaryExpression {
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def nullIntolerant: Boolean = true
-  override def prettyName: String = "minhash_md5_signature"
-
-  protected override def nullSafeEval(input: Any): Any =
-    TextImpl.minHashMd5(input.asInstanceOf[UTF8String], numHashes)
-
-  protected override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.TextImpl.minHashMd5($c, $numHashes)")
-
-  protected override def withNewChildInternal(newChild: Expression): MinHashMd5Expr =
-    copy(child = newChild)
-}
-
-/** text → 60-bit md5 SimHash. */
-case class SimHashMd5Expr(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = LongType
-  override def nullIntolerant: Boolean = true
-  override def prettyName: String = "simhash_md5"
-
-  protected override def nullSafeEval(input: Any): Any =
-    TextImpl.simHashMd5(input.asInstanceOf[UTF8String])
-
-  protected override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.TextImpl.simHashMd5($c)")
-
-  protected override def withNewChildInternal(newChild: Expression): SimHashMd5Expr =
-    copy(child = newChild)
-}
-
-/** text → 64-bit xxhash64 SimHash (the production variant). */
-case class SimHashXxExpr(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = LongType
-  override def nullIntolerant: Boolean = true
-  override def prettyName: String = "simhash_xx"
-
-  protected override def nullSafeEval(input: Any): Any =
-    TextImpl.simHashXx(input.asInstanceOf[UTF8String])
-
-  protected override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.TextImpl.simHashXx($c)")
-
-  protected override def withNewChildInternal(newChild: Expression): SimHashXxExpr =
-    copy(child = newChild)
-}
-
-/** text → wrapping-Long base-31 rolling fingerprint. */
-case class FingerprintWrapExpr(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = LongType
-  override def nullIntolerant: Boolean = true
-  override def prettyName: String = "fingerprint_wrap"
-
-  protected override def nullSafeEval(input: Any): Any =
-    TextImpl.fingerprintWrap(input.asInstanceOf[UTF8String])
-
-  protected override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.TextImpl.fingerprintWrap($c)")
-
-  protected override def withNewChildInternal(newChild: Expression): FingerprintWrapExpr =
-    copy(child = newChild)
-}
-
-/** text → mod-p base-31 rolling fingerprint (the oracle twin). */
-case class FingerprintModExpr(child: Expression, p: Long) extends UnaryExpression {
-  override def dataType: DataType = LongType
-  override def nullIntolerant: Boolean = true
-  override def prettyName: String = "fingerprint_mod"
-
-  protected override def nullSafeEval(input: Any): Any =
-    TextImpl.fingerprintMod(input.asInstanceOf[UTF8String], p)
-
-  protected override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.TextImpl.fingerprintMod($c, ${p}L)")
-
-  protected override def withNewChildInternal(newChild: Expression): FingerprintModExpr =
-    copy(child = newChild)
-}
-
-/** text → winnowing fingerprint summary struct (n_fp, min_fp, max_fp). */
-case class WinnowExpr(child: Expression, k: Int, w: Int) extends UnaryExpression {
-  override def dataType: DataType = WinnowExpr.schema
-  override def nullIntolerant: Boolean = true
-  override def prettyName: String = "winnow_summary"
-
-  protected override def nullSafeEval(input: Any): Any =
-    TextImpl.winnow(input.asInstanceOf[UTF8String], k, w)
-
-  protected override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.TextImpl.winnow($c, $k, $w)")
-
-  protected override def withNewChildInternal(newChild: Expression): WinnowExpr =
-    copy(child = newChild)
-}
-
-object WinnowExpr {
-  val schema: StructType = StructType(Seq(
+  val WinnowSchema: StructType = StructType(Seq(
     StructField("n_fp", LongType, nullable = false),
     StructField("min_fp", LongType, nullable = true),
     StructField("max_fp", LongType, nullable = true)))
-}
 
-/** Column-level entry points for the compiled text kernels. */
-/** text → (tot2, top2, dup2, tot5, top5, dup5) token n-gram repetition
-  * counts (Gopher quality filters).
-  */
-case class RepStatsExpr(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = RepStatsExpr.schema
-  override def nullIntolerant: Boolean = true
-  override def prettyName: String = "repetition_stats"
+  /** text → winnowing fingerprint summary struct (n_fp, min_fp, max_fp). */
+  def winnow(text: Column, k: Int, w: Int): Column =
+    invoke(TextImpl, "winnow", WinnowSchema, text, lit(k), lit(w))
 
-  protected override def nullSafeEval(input: Any): Any =
-    TextImpl.repStats(input.asInstanceOf[UTF8String])
-
-  protected override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.TextImpl.repStats($c)")
-
-  protected override def withNewChildInternal(newChild: Expression): RepStatsExpr =
-    copy(child = newChild)
-}
-
-object RepStatsExpr {
-  val schema: StructType = StructType(Seq(
+  val RepStatsSchema: StructType = StructType(Seq(
     StructField("tot2", LongType, nullable = false),
     StructField("top2", LongType, nullable = false),
     StructField("dup2", LongType, nullable = false),
     StructField("tot5", LongType, nullable = false),
     StructField("top5", LongType, nullable = false),
     StructField("dup5", LongType, nullable = false)))
-}
 
-object Text {
-  import org.apache.spark.sql.graft.ColumnBridge
-
-  def shingles(text: Column, n: Int): Column =
-    ColumnBridge.column(ShinglesExpr(ColumnBridge.expression(text), n))
-
-  def jaccard(a: Column, b: Column): Column =
-    ColumnBridge.column(JaccardExpr(ColumnBridge.expression(a), ColumnBridge.expression(b)))
-
-  def minHashMd5(text: Column, numHashes: Int): Column =
-    ColumnBridge.column(MinHashMd5Expr(ColumnBridge.expression(text), numHashes))
-
-  def simHashMd5(text: Column): Column =
-    ColumnBridge.column(SimHashMd5Expr(ColumnBridge.expression(text)))
-
-  def simHashXx(text: Column): Column =
-    ColumnBridge.column(SimHashXxExpr(ColumnBridge.expression(text)))
-
-  def fingerprintWrap(text: Column): Column =
-    ColumnBridge.column(FingerprintWrapExpr(ColumnBridge.expression(text)))
-
-  def fingerprintMod(text: Column, p: Long): Column =
-    ColumnBridge.column(FingerprintModExpr(ColumnBridge.expression(text), p))
-
-  def winnow(text: Column, k: Int, w: Int): Column =
-    ColumnBridge.column(WinnowExpr(ColumnBridge.expression(text), k, w))
-
-  def repStats(text: Column): Column =
-    ColumnBridge.column(RepStatsExpr(ColumnBridge.expression(text)))
+  /** text → (tot2, top2, dup2, tot5, top5, dup5) token n-gram repetition
+    * counts (Gopher quality filters).
+    */
+  def repStats(text: Column): Column = invoke(TextImpl, "repStats", RepStatsSchema, text)
 }

@@ -13,7 +13,10 @@ import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType}
   * is hundreds of millions of allocations per run, and measured wall-clock
   * degraded 4-10× as the session aged (GC pressure). These kernels run the
   * same left-to-right folds as tight compiled loops invoked from generated
-  * code (policy: custom Expression with doGenCode, never a UDF).
+  * code. Unlike the other kernels (which enter the plan through
+  * `ColumnBridge.invoke`), these stay custom Expressions: the generated call
+  * passes whether each array holds floats or doubles, read from the ANALYZED
+  * child type, which a call fixed when the Column is built cannot see.
   *
   * EXACTNESS: the fold order is identical to both the HOF formulation they
   * replace and the DuckDB `list_reduce` twins — acc + a(i)·b(i) ascending —

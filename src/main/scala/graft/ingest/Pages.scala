@@ -41,7 +41,8 @@ object Pages {
       lit(".</p>\n  <script>var tracking = \"<p>\";</script>\n</body></html>"))
 
   /** The frozen extractor: html binary → text string. Production form is
-    * the single-pass codegen'd [[graft.functions.ExtractTextExpr]]; the
+    * the single-pass compiled kernel [[graft.functions.ExtractTextExpr]]
+    * (a direct ExtractTextImpl call in generated code); the
     * regex chain below is kept as the executable SPECIFICATION (the DuckDB
     * oracle evaluates the same chain) and tests assert both forms equal.
     */

@@ -109,26 +109,28 @@ object Docs {
     shinglesFromTokens(split(trim(text), "\\s+"), n)
 
   /** Word-shingles of size n from whitespace-tokenized text, via the
-    * compiled single-pass kernel (graft.functions.ShinglesExpr — the HOF
+    * compiled single-pass kernel (graft.functions.Text.shingles — the HOF
     * formulation above evaluates interpreted per element).
     */
   def shingles(text: Column, n: Int): Column =
     graft.functions.Text.shingles(text, n)
 
-  /** MinHash signature: for each of `numHashes` seeded permutations, the
-    * minimum xxhash64(seed, shingle) over the doc's shingle set. LSH banding
-    * then buckets signatures for near-dup candidate generation — turning
-    * all-pairs similarity into an equi join on (band, band_hash).
+  /** Shingle size of the engine's near-dup pipeline: the compiled MinHash
+    * kernel hashes token 3-grams, and the Jaccard verification stage
+    * shingles the same way.
     */
-  /** MinHash signatures via the compiled single-pass kernel
-    * (graft.functions.MinHashSigExpr — the HOF formulation evaluated
-    * interpreted per element and was ~50× slower).
+  val DefaultShingleSize = 3
+
+  /** MinHash signature: for each of the MinHashImpl.NumHashes (16) seeded
+    * permutations, the minimum hash over the doc's distinct
+    * [[DefaultShingleSize]]-token shingles. LSH banding then buckets
+    * signatures for near-dup candidate generation — turning all-pairs
+    * similarity into an equi join on (band, band_hash). Runs as the
+    * compiled single-pass kernel (graft.functions.MinHashSigExpr — the HOF
+    * formulation evaluated interpreted per element and was ~50× slower).
     */
-  def minHashSignature(docs: DataFrame, shingleSize: Int = 3, numHashes: Int = 16): DataFrame = {
-    require(shingleSize == 3 && numHashes == graft.functions.MinHashImpl.NumHashes,
-      "the compiled kernel is specialized to 3-gram shingles × 16 permutations")
+  def minHashSignature(docs: DataFrame): DataFrame =
     docs.select(col("doc_id"), graft.functions.MinHashSigExpr(col("text")).as("signature"))
-  }
 
   /** LSH near-dup candidate pairs: split the signature into `bands` bands,
     * hash each band, group by (band_idx, band_hash) → candidate pairs with
@@ -154,8 +156,8 @@ object Docs {
   /** The `bands` band hashes of a MinHash signature, one EXPLICIT column per
     * band: xxhash64 over the band's slice of the NumHashes-long signature.
     * Not a HOF over the signature: an alias referenced once inside a lambda
-    * can be inlined by CollapseProject (re-running MinHashSigExpr per band
-    * element, interpreted), whereas `bands` explicit references of the
+    * can be inlined by CollapseProject (re-running the MinHash kernel per
+    * band element, interpreted), whereas `bands` explicit references of the
     * expensive alias are never inlined — the signature is computed once per
     * row. Shared by [[bandRows]] and the streaming near-dedup
     * (graft.streaming.Streams.nearDedupDocs).
@@ -219,7 +221,7 @@ object Docs {
     * a shingle s = md5Long("i|" ++ s); signature element = min over the
     * doc's distinct 3-gram shingles (Long.MaxValue for docs with < 3
     * tokens — same sentinel both engines). Runs as ONE compiled
-    * tokenize→shingle→hash→min pass (graft.functions.MinHashMd5Expr); the
+    * tokenize→shingle→hash→min pass (graft.functions.Text.minHashMd5); the
     * HOF formulation is retained below as [[minHashMd5SignatureHof]].
     * The kernel output is staged as its own projection so the 4 mh_i
     * references don't inline (CollapseProject keeps non-cheap aliases).
@@ -286,7 +288,7 @@ object Docs {
   /** Exact n-gram Jaccard similarity for candidate pairs (verification stage
     * after LSH, or direct for small sets).
     */
-  def jaccard(docs: DataFrame, pairs: DataFrame, shingleSize: Int = 3): DataFrame =
+  def jaccard(docs: DataFrame, pairs: DataFrame, shingleSize: Int = DefaultShingleSize): DataFrame =
     jaccardFromShingles(
       docs.select(col("doc_id"), shingles(col("text"), shingleSize).as("sh")), pairs)
 
@@ -307,7 +309,7 @@ object Docs {
 
   /** SimHash (64-bit) over whitespace tokens: sign-sum of per-token xxhash64
     * bits weighted by term frequency; near-dups have small Hamming distance.
-    * One compiled tokenize→hash→sign-sum→pack pass (SimHashXxExpr): the HOF
+    * One compiled tokenize→hash→sign-sum→pack pass (Text.simHashXx): the HOF
     * formulation ([[simHashHof]]) evaluated 64 boxed counter updates PER
     * TOKEN, interpreted.
     */
@@ -846,7 +848,7 @@ object Docs {
     * n-gram count for n ∈ {2, 5}, plus the two headline filter fractions
     * (top-2-gram fraction, duplicate-5-gram fraction). A boilerplate or
     * looping-generation document scores high and is gated out upstream of
-    * training. Pure per-row projection (compiled RepStatsExpr kernel —
+    * training. Pure per-row projection (compiled Text.repStats kernel —
     * zero shuffles at any scale); counts are exact integers and each
     * fraction is ONE int/int IEEE division, so the DuckDB unnest→GROUP BY
     * twin is bit-identical.

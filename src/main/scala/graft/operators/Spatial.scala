@@ -140,7 +140,7 @@ object Spatial {
     // apart, identical to probing p's ring, but the (2k+1)² fanout hits the
     // tiny dim instead of the 10^12-row probe side
     val dimCells = dim.withColumn("probe_cell",
-      explode(Grid.kRing(Grid.cell(col("d_lat"), col("d_lon"), res), res, maxRings)))
+      explode(Grid.kRing(Grid.cell(col("d_lat"), col("d_lon"), res), maxRings)))
     // acceptance bound from the S2 min-width metric: anything OUTSIDE a
     // dim's maxRings-ring is ≥ maxRings·minWidth away (ring ⊇ BFS ball and
     // a path leaving the ball crosses that many full cell widths), and

@@ -61,10 +61,14 @@ class GeoSpec extends SparkSpec {
     rows.foreach(r => assert(r.getLong(0) === r.getLong(1)))
   }
 
+  test("grid cell rejects a level outside 0..30 when the Column is built") {
+    intercept[IllegalArgumentException](Grid.cell(col("lat"), col("lon"), 31))
+  }
+
   test("kRing contains the cell itself and has (2k+1)^2 members away from edges") {
     val df = Seq((40.0, -75.0)).toDF("lat", "lon")
       .select(Grid.cell(col("lat"), col("lon"), 13).as("cell"))
-    val ring = df.select(Grid.kRing(col("cell"), 13, 1).as("ring"), col("cell")).head
+    val ring = df.select(Grid.kRing(col("cell"), 1).as("ring"), col("cell")).head
     val cells = ring.getSeq[Long](0)
     assert(cells.size === 9)
     assert(cells.contains(ring.getLong(1)))

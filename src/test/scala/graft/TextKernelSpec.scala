@@ -133,6 +133,65 @@ class TextKernelSpec extends SparkSpec {
     assert(r9.getAs[Double]("dup5_frac") === 1.0)
   }
 
+  test("every compiled-kernel Column entry point: null in → null out, non-null in → non-nullable out, codegen'd") {
+    import org.apache.spark.sql.Column
+    import org.apache.spark.sql.execution.{ProjectExec, WholeStageCodegenExec}
+    import graft.functions._
+    // two rows from a Range scan (not a local relation, whose projections
+    // the optimizer evaluates eagerly); each input also has an "_n" twin that
+    // is null on row 0
+    val base = spark.range(0, 2, 1, 1).select(
+      col("id"),
+      concat(lit("the quick brown fox jumps "), col("id").cast("string")).as("text"),
+      concat(lit("<p>a &amp; b "), col("id").cast("string"), lit("</p>")).cast("binary").as("html"),
+      (lit(40.0) + col("id")).as("lat"),
+      (lit(-75.0) - col("id")).as("lon"),
+      lit(Grid.cellId(40.0, -75.0, 13)).as("cell"),
+      array(lit("a b"), concat(lit("b "), col("id").cast("string"))).as("sh"),
+      (col("id") + 4).cast("int").as("side"),
+      PngImageExpr(lit(4), lit(4), col("id")).as("png"),
+      WavAudioExpr(lit(8000), lit(1), lit(16), col("id")).as("wav"))
+    val inputs = base.columns.filterNot(_ == "id")
+    inputs.foreach(c => assert(!base.schema(c).nullable, s"fixture column $c must be non-nullable"))
+    val frame = base.select(col("id") +: inputs.flatMap(c =>
+      Seq(col(c), when(col("id") === 0, lit(null)).otherwise(col(c)).as(c + "_n"))): _*)
+    val kernels: Seq[(String, (String => Column) => Column)] = Seq(
+      "Text.shingles" -> (in => Text.shingles(in("text"), 3)),
+      "Text.jaccard" -> (in => Text.jaccard(in("sh"), in("sh"))),
+      "Text.minHashMd5" -> (in => Text.minHashMd5(in("text"), 4)),
+      "Text.simHashMd5" -> (in => Text.simHashMd5(in("text"))),
+      "Text.simHashXx" -> (in => Text.simHashXx(in("text"))),
+      "Text.fingerprintWrap" -> (in => Text.fingerprintWrap(in("text"))),
+      "Text.fingerprintMod" -> (in => Text.fingerprintMod(in("text"), 1000003L)),
+      "Text.winnow" -> (in => Text.winnow(in("text"), 5, 4)),
+      "Text.repStats" -> (in => Text.repStats(in("text"))),
+      "Grid.cell" -> (in => Grid.cell(in("lat"), in("lon"), 13)),
+      "Grid.kRing" -> (in => Grid.kRing(in("cell"), 1)),
+      "ExtractTextExpr" -> (in => ExtractTextExpr(in("html"))),
+      "MinHashSigExpr" -> (in => MinHashSigExpr(in("text"))),
+      "PngImageExpr" -> (in => PngImageExpr(in("side"), in("side"), in("id"))),
+      "PngImageLinExpr" -> (in => PngImageLinExpr(in("side"), in("side"), in("id"))),
+      "WavAudioExpr" -> (in => WavAudioExpr(lit(8000), in("side"), in("side"), in("id"))),
+      "WavAudioLinExpr" -> (in => WavAudioLinExpr(lit(8000), in("side"), in("side"), in("id"))),
+      "PngStatsExpr" -> (in => PngStatsExpr(in("png"))),
+      "WavStatsExpr" -> (in => WavStatsExpr(in("wav"))))
+    for ((name, kernel) <- kernels) {
+      val nonNull = frame.select(kernel(col).as("k"))
+      assert(!nonNull.schema("k").nullable, s"$name: non-null input must give a non-nullable output")
+      val withNull = frame.select(col("id"),
+        kernel(c => if (c == "id") col(c) else col(c + "_n")).as("k"))
+      assert(withNull.schema("k").nullable, s"$name: nullable input must give a nullable output")
+      val rows = withNull.orderBy("id").collect()
+      assert(rows(0).isNullAt(1), s"$name: null input row must give null")
+      assert(!rows(1).isNullAt(1), s"$name: non-null input row must give a value")
+      val codegend = withNull.queryExecution.executedPlan.collect {
+        case w: WholeStageCodegenExec => w.child.collect {
+          case p: ProjectExec if p.output.exists(_.name == "k") => p }
+      }.flatten
+      assert(codegend.nonEmpty, s"$name: the kernel projection must plan inside WholeStageCodegen")
+    }
+  }
+
   test("kernels agree with HOF twins on the sf0.001 documents corpus") {
     val docs = graft.sources.Tables.documents(spark, "/root/testdata/sf0.001")
       .select("doc_id", "text")
