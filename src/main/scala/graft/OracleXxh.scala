@@ -30,7 +30,6 @@ package graft
   */
 object OracleXxh {
 
-  private val B64 = BigInt(1) << 64
   private val B64lit = "18446744073709551616::HUGEINT"
   private val P1 = BigInt("9E3779B185EBCA87", 16)
   private val P2 = BigInt("C2B2AE3D27D4EB4F", 16)

@@ -29,10 +29,7 @@ object SparkEntry {
     val pts = Tables.gps(spark, dir)
       .withColumn("cell", Grid.cell(col("lat"), col("lon"), 13))
       .withColumn("tile_id", Grid.toParent(col("cell"), 13, 5))
-    val rects = regionRects(spark, dir)
-    pts.join(broadcast(rects),
-        col("lat") >= col("lat_min") && col("lat") < col("lat_max") &&
-          col("lon") >= col("lon_min") && col("lon") < col("lon_max"))
+    Spatial.pointInRect(pts, regionRects(spark, dir))
       .groupBy("r_regionkey", "tile_id")
       .agg(count(lit(1)).as("n_points"), countDistinct("user_id").as("n_users"))
   }
@@ -189,17 +186,12 @@ object SparkEntry {
     // ---- clustering (G7/G2/G8 + home/work, gscap/gps.py:940-1270) -------
     // not SQL-expressible → rows-only driver check; exact-value parity is
     // pinned in ClusteringSpec (40.00015/-45.0 fixture etc.)
-    // single-output consumers ride contextTagged DIRECTLY (r6): the
-    // clustersWithContext persist only pays off when BOTH outputs are
-    // consumed — here it added a full MEMORY_AND_DISK write of the tagged
-    // frame per invocation for nothing (guide §5: cache only reused frames).
-    // Identical kernel, identical rows.
+    // each query consumes ONE of the two unpersisted views of the per-user
+    // pass (Clustering.clustersWithContext), so the pass runs once per query
     "gps_clusters" -> ((s, d) =>
-      operators.Clustering.contextTagged(Pipelines.velocities(s, d), minSamples = 20)
-        .where(col("clu").isNotNull).select(col("clu.*"))),
+      operators.Clustering.clustersWithContext(Pipelines.velocities(s, d), minSamples = 20)._2.toDF()),
     "gps_cluster_labels" -> ((s, d) =>
-      operators.Clustering.contextTagged(Pipelines.velocities(s, d), minSamples = 20)
-        .where(col("rec").isNotNull).select(col("rec.*"))
+      operators.Clustering.clustersWithContext(Pipelines.velocities(s, d), minSamples = 20)._1
         .groupBy("user_id", "cid")
         .agg(count(lit(1)).as("n_points"),
           bround(avg("distance_from_home"), 0).as("avg_dfh_m"))),
@@ -229,12 +221,11 @@ object SparkEntry {
     "gps_full_pipeline" -> ((s, d) => {
       // velocities → home/work/x-cluster labels → sessionized visits →
       // per-cluster visit statistics: the reference's §3.1 lifecycle.
-      // records-only consumer → contextTagged direct (no persist), see
-      // gps_clusters above; visits/clusterMetrics each consume their input
-      // exactly once so nothing downstream re-runs the per-user kernel.
-      val records = operators.Clustering.contextTagged(
-        Pipelines.velocities(s, d), minSamples = 20)
-        .where(col("rec").isNotNull).select(col("rec.*"))
+      // records-only consumer, see gps_clusters above; visits and
+      // clusterMetrics each consume their input exactly once so nothing
+      // downstream re-runs the per-user kernel.
+      val records = operators.Clustering.clustersWithContext(
+        Pipelines.velocities(s, d), minSamples = 20)._1
       val visits = Sessions.visits(records.withColumn("date", col("ts").cast("date")))
       Sessions.clusterMetrics(visits)
     }),
@@ -810,6 +801,17 @@ object SparkEntry {
     ("not found", -1, "none", "none"),
     ("quota_exceeded", -1, "none", "none"),
     ("JSONDecodeError", -1, "{nope", "JSONDecodeError"))
+
+  /** SQL twin of Docs' language-score fold: one `<prefix><lang>` column per
+    * language, sorted, each line indented by `indent`.
+    */
+  private def langScoreCols(indent: String, prefix: String): String =
+    Docs.LangMarkers.toSeq.sortBy(_._1).map { case (lang, pats) =>
+      val terms = pats.map(p =>
+        s"(length(' ' || text || ' ') - length(replace(' ' || text || ' ', '$p', ''))) / ${p.length}")
+        .mkString(" + ")
+      s"${indent}CAST($terms AS BIGINT) AS $prefix$lang"
+    }.mkString(",\n")
 
   def oracleSql: Map[String, String] = {
     import OracleSql.{gpsCte, labCtes, velCtes, visitCtes, s2CellCtes}
@@ -1564,25 +1566,13 @@ object SparkEntry {
           |  CASE WHEN coalesce(a5.tot5, 0) > 0
           |       THEN CAST(a5.dup5 AS DOUBLE) / CAST(a5.tot5 AS DOUBLE) ELSE 0e0 END AS dup5_frac
           |FROM toks k LEFT JOIN a2 USING (doc_id) LEFT JOIN a5 USING (doc_id)""".stripMargin,
-      "doc_lang" -> {
-        val scores = Docs.LangMarkers.toSeq.sortBy(_._1).map { case (lang, pats) =>
-          val terms = pats.map(p =>
-            s"(length(' ' || text || ' ') - length(replace(' ' || text || ' ', '$p', ''))) / ${p.length}")
-            .mkString(" + ")
-          s"  CAST($terms AS BIGINT) AS score_$lang"
-        }.mkString(",\n")
+      "doc_lang" ->
         s"""SELECT doc_id, lang AS actual_lang,
-           |$scores
-           |FROM documents""".stripMargin
-      },
+           |${langScoreCols("  ", "score_")}
+           |FROM documents""".stripMargin,
       "doc_filter_pipeline" -> {
         val langs = Docs.LangMarkers.toSeq.sortBy(_._1)
-        val scoreCols = langs.map { case (lang, pats) =>
-          val terms = pats.map(p =>
-            s"(length(' ' || text || ' ') - length(replace(' ' || text || ' ', '$p', ''))) / ${p.length}")
-            .mkString(" + ")
-          s"    CAST($terms AS BIGINT) AS s_$lang"
-        }.mkString(",\n")
+        val scoreCols = langScoreCols("    ", "s_")
         val bestExpr = s"greatest(${langs.map("s_" + _._1).mkString(", ")})"
         val predCase = langs.map { case (lang, _) =>
           s"WHEN s_$lang = $bestExpr THEN '$lang'" }.mkString(" ")

@@ -95,13 +95,6 @@ object S2 {
     case _ => (v, u, -1.0)
   }
 
-  def faceUv(lat: Double, lon: Double): (Int, Double, Double) = {
-    val phi = lat / 180.0 * math.Pi
-    val theta = lon / 180.0 * math.Pi
-    val cosphi = math.cos(phi)
-    faceUvFromXyz(cosphi * math.cos(theta), cosphi * math.sin(theta), math.sin(phi))
-  }
-
   /** ⌊s·2^level⌋ clamped to [0, 2^level) — floor BEFORE clamp, mirrored by
     * the SQL twin's least(greatest(floor(·),0),n−1).
     */
@@ -131,7 +124,8 @@ object S2 {
 
   /** The codec entry point: (lat°, lon°) → S2 cell id at `level`.
     * Allocation-free (no tuples) — this runs per row in the hot encode path.
-    * Semantics identical to faceUvFromXyz/faceUv (same ties, same order).
+    * Semantics identical to the lat/lon → xyz → faceUvFromXyz route (same
+    * ties, same order).
     */
   def cellId(lat: Double, lon: Double, level: Int): Long = {
     val phi = lat / 180.0 * math.Pi

@@ -12,8 +12,8 @@ import org.apache.spark.unsafe.types.UTF8String
 /** Compiled kernels for the hot-path text operators (shingling, Jaccard,
   * md5-MinHash, SimHash, rolling-hash fingerprints, winnowing).
   *
-  * The Column-HOF formulations in [[graft.operators.Docs]] evaluate
-  * interpreted with one boxed value per element per row — the same failure
+  * Their Column-HOF formulations (parity specs in the test object HofTwins)
+  * evaluate interpreted, one boxed value per element per row — the failure
   * mode measured at 4-10× on the cosine path and fixed by [[VecImpl]]. These
   * kernels run the identical tokenize→hash→fold pipelines as tight compiled
   * loops, called directly from generated code (they enter the plan through
@@ -21,8 +21,8 @@ import org.apache.spark.unsafe.types.UTF8String
   *
   * EXACTNESS CONTRACT — every function here is a bit-identical twin of the
   * Column-expression formulation it replaces (pinned in TextKernelSpec
-  * against the retained HOF twins, and by the DuckDB gate):
-  *   - tokens  ≡ split(trim(text), "\\s+"): trim strips 0x20 only (Spark's
+  * against the HOF twins in graft.HofTwins, and by the DuckDB gate):
+  *   - tokens  ≡ Docs.tokens: trim strips 0x20 only (Spark's
   *     StringTrim), then java.util.regex split with limit -1 (Spark's
   *     StringSplit default — KEEPS trailing empty strings);
   *   - md5Long ≡ conv(substring(md5(x), 1, 15), 16, 10): the top 60 bits of
@@ -49,7 +49,7 @@ object TextImpl {
     if (i == 0 && j == s.length) s else s.substring(i, j)
   }
 
-  /** Twin of split(trim(text), "\\s+") — Pattern.split with limit -1. */
+  /** Twin of Docs.tokens — Pattern.split with limit -1. */
   def tokens(text: UTF8String): Array[String] =
     Ws.split(trimSpaces(text.toString), -1)
 
@@ -65,7 +65,7 @@ object TextImpl {
   }
 
   /** Distinct n-token shingles in first-occurrence order (twin of
-    * Docs.shinglesFromTokens ∘ tokenize: empty when the doc has < n tokens).
+    * HofTwins.shingles in the tests: empty when the doc has < n tokens).
     */
   private def shingleSet(text: UTF8String, n: Int): java.util.LinkedHashSet[String] = {
     val toks = tokens(text)

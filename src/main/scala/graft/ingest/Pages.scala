@@ -42,23 +42,12 @@ object Pages {
 
   /** The frozen extractor: html binary → text string. Production form is
     * the single-pass compiled kernel [[graft.functions.ExtractTextExpr]]
-    * (a direct ExtractTextImpl call in generated code); the
-    * regex chain below is kept as the executable SPECIFICATION (the DuckDB
-    * oracle evaluates the same chain) and tests assert both forms equal.
+    * (a direct ExtractTextImpl call in generated code); PagesSpec asserts it
+    * equals the executable SPECIFICATION, the regex chain kept in the test
+    * object HofTwins (the DuckDB oracle evaluates the same chain).
     */
   def extractText(html: Column): Column =
     graft.functions.ExtractTextExpr(html)
-
-  /** Reference regex-chain form of the extractor (the frozen spec). */
-  def extractTextRegex(html: Column): Column = {
-    val s  = decode(html, "UTF-8")
-    val s1 = regexp_replace(s, "(?s)<script[^>]*>.*?</script>", " ")
-    val s2 = regexp_replace(s1, "(?s)<style[^>]*>.*?</style>", " ")
-    val s3 = regexp_replace(s2, "<[^>]*>", " ")
-    val s4 = regexp_replace(regexp_replace(regexp_replace(s3,
-      "&amp;", "&"), "&lt;", "<"), "&gt;", ">")
-    trim(regexp_replace(s4, "\\s+", " "))
-  }
 
   /** Synthesize the pages table from a GPS stream (user_id, event_id, ts,
     * lat, lon). `text` is the extractor's own output over `html` — the

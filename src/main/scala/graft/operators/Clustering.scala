@@ -114,20 +114,35 @@ object Clustering {
   private def isWeekday(ts: Timestamp): Boolean =
     ts.toInstant.atZone(java.time.ZoneOffset.UTC).getDayOfWeek.getValue <= 5 // Mon=1..Fri=5 ⇔ python weekday()<5
 
-  /** DBSCAN over a subset + top-cluster extraction (estimate_home/work shape,
-    * gps.py:940-999). Returns (center, memberIdx-in-input).
+  /** estimate_home/work (gps.py:940-999) + the 500 m median-fence relabel
+    * (gps.py:1121-1196): DBSCAN the `pick`ed stationary rows, take the top
+    * cluster; if `accept` holds for its center, each `inFence` row joins
+    * (≤ fence) or leaves by its distance to the members' median. Its rows get
+    * cid `label` and leave the stationary set. Returns (site, remaining).
     */
-  private def estimateSite(pts: mutable.ArrayBuffer[(Int, (Double, Double))],
-                           user: Long, label: String,
-                           eps: Double, minSamples: Int): (Option[ClusterRow], Set[Int]) = {
-    if (pts.isEmpty) return (None, Set.empty)
-    val labels = Dbscan.run(pts.map(_._2).toArray, eps, minSamples)
-    Dbscan.topCluster(labels) match {
-      case None => (None, Set.empty)
-      case Some(top) =>
-        val members = pts.indices.filter(labels(_) == top)
-        val center = centerStats(user, label, members.map(i => pts(i)._2))
-        (Some(center), members.map(i => pts(i)._1).toSet)
+  private def fenceSite(user: Long, eps: Double, minSamples: Int, fence: Double,
+                        cids: mutable.HashMap[Long, String])(
+      stationary: IndexedSeq[EnrichedPoint], label: String)(
+      pick: EnrichedPoint => Boolean, inFence: EnrichedPoint => Boolean,
+      accept: ClusterRow => Boolean): (Option[ClusterRow], IndexedSeq[EnrichedPoint]) = {
+    def at(i: Int) = (stationary(i).lat, stationary(i).lon)
+    val picked = stationary.indices.filter(i => pick(stationary(i)))
+    val labels = Dbscan.run(picked.map(at).toArray, eps, minSamples)
+    Dbscan.topCluster(labels).map { top =>
+      val members = picked.indices.filter(labels(_) == top).map(picked)
+      (centerStats(user, label, members.map(at)), members)
+    } match {
+      case Some((center, members)) if accept(center) =>
+        val mlat = median(members.map(stationary(_).lat))
+        val mlon = median(members.map(stationary(_).lon))
+        val mask = mutable.HashSet.empty[Int] ++ members
+        stationary.indices.filter(i => inFence(stationary(i))).foreach { idx =>
+          val r = stationary(idx)
+          if (haversine(mlat, mlon, r.lat, r.lon) <= fence) mask += idx else mask -= idx
+        }
+        mask.foreach(idx => cids(stationary(idx).event_id) = label)
+        (Some(center), stationary.indices.filterNot(mask).map(stationary))
+      case _ => (None, stationary)
     }
   }
 
@@ -139,75 +154,27 @@ object Clustering {
     if (rows.length < 3)
       return (rows.map(r => LabeledRecord(r.user_id, r.event_id, r.ts, r.lat, r.lon, r.binning, "xNot", None)), Nil)
 
-    var stationary = rows.filter(_.binning == "stationary").toIndexedSeq
-    val others     = rows.filter(_.binning != "stationary")
-    val cids       = mutable.HashMap.empty[Long, String] // event_id → cid
-    val clusters   = mutable.ArrayBuffer.empty[ClusterRow]
+    val cids = mutable.HashMap.empty[Long, String] // event_id → cid
+    val site = fenceSite(user, eps, minSamples, fence, cids) _
 
     // --- home (gps.py:1119-1146)
-    val nightIdx = mutable.ArrayBuffer.empty[(Int, (Double, Double))]
-    stationary.zipWithIndex.foreach { case (r, i) =>
-      val h = hourOf(r.ts)
-      if ((h > 0 && h < 6) || (h > 19 && h < 24)) nightIdx += ((i, (r.lat, r.lon)))
-    }
-    val (homeOpt, hmask0) = estimateSite(nightIdx, user, "home", eps, minSamples)
-    var home: Option[ClusterRow] = homeOpt
-    if (hmask0.nonEmpty) {
-      val hmask = mutable.HashSet.empty[Int] ++ hmask0
-      val hlat = median(hmask0.toSeq.map(stationary(_).lat))
-      val hlon = median(hmask0.toSeq.map(stationary(_).lon))
-      stationary.indices.foreach { idx =>
-        val r = stationary(idx)
-        val d = haversine(hlat, hlon, r.lat, r.lon)
-        if (d <= fence) hmask += idx else hmask -= idx
-      }
-      stationary.indices.foreach { idx =>
-        if (hmask(idx)) cids(stationary(idx).event_id) = "home"
-      }
-      stationary = stationary.indices.filterNot(hmask).map(stationary).toIndexedSeq
-    } else home = None
+    val (home, afterHome) = site(rows.filter(_.binning == "stationary").toIndexedSeq, "home")(
+      r => { val h = hourOf(r.ts); (h > 0 && h < 6) || (h > 19 && h < 24) },
+      _ => true, _ => true)
 
     // --- work (gps.py:1149-1196)
-    val workIdx = mutable.ArrayBuffer.empty[(Int, (Double, Double))]
-    stationary.zipWithIndex.foreach { case (r, i) =>
-      val h = hourOf(r.ts)
-      if (h >= 9 && h <= 17 && isWeekday(r.ts)) workIdx += ((i, (r.lat, r.lon)))
-    }
-    var (workOpt, wmask0) = estimateSite(workIdx, user, "work", eps, minSamples)
-    if (wmask0.nonEmpty) {
-      val valid = home.forall { h =>
-        workOpt.exists(w => haversine(w.lat, w.lon, h.lat, h.lon) / 1000.0 <= 161.0)
-      }
-      if (valid) {
-        val wmask = mutable.HashSet.empty[Int] ++ wmask0
-        val wlat = median(wmask0.toSeq.map(stationary(_).lat))
-        val wlon = median(wmask0.toSeq.map(stationary(_).lon))
-        stationary.indices.foreach { idx =>
-          val r = stationary(idx)
-          val h = hourOf(r.ts)
-          if (h > 7 && h < 20) {
-            val d = haversine(wlat, wlon, r.lat, r.lon)
-            if (d <= fence) wmask += idx else wmask -= idx
-          }
-        }
-        stationary.indices.foreach { idx =>
-          if (wmask(idx)) cids(stationary(idx).event_id) = "work"
-        }
-        stationary = stationary.indices.filterNot(wmask).map(stationary).toIndexedSeq
-      } else { workOpt = None; wmask0 = Set.empty }
-    } else workOpt = None
+    val (workOpt, stationary) = site(afterHome, "work")(
+      r => { val h = hourOf(r.ts); h >= 9 && h <= 17 && isWeekday(r.ts) },
+      r => { val h = hourOf(r.ts); h > 7 && h < 20 },
+      w => home.forall(h => haversine(w.lat, w.lon, h.lat, h.lon) / 1000.0 <= 161.0))
 
     // --- remaining stationary → x<k> clusters (gps.py:1199-1217)
-    val labels = Dbscan.run(stationary.map(r => (r.lat, r.lon)).toArray, eps, minSamples)
+    val (labels, xs) = xClusters(user, stationary.map(r => (r.lat, r.lon)), 0, eps, minSamples)
     stationary.indices.foreach { i =>
       cids(stationary(i).event_id) = if (labels(i) != -1) s"x${labels(i)}" else "xNot"
     }
-    labels.distinct.filter(_ != -1).sorted.foreach { l =>
-      val members = stationary.indices.filter(labels(_) == l).map(i => (stationary(i).lat, stationary(i).lon))
-      clusters += centerStats(user, s"x$l", members)
-    }
-    home.foreach(h => clusters += h.copy(name = "home", categories = "home"))
-    workOpt.foreach(w => clusters += w.copy(name = "work", categories = "work"))
+    val clusters = xs ++ home.map(_.copy(name = "home", categories = "home")) ++
+      workOpt.map(_.copy(name = "work", categories = "work"))
 
     // --- distance_from_home from the ROUNDED home center (gps.py:1264-1270)
     val records = rows.map { r =>
@@ -215,7 +182,19 @@ object Clustering {
       val dfh = home.map(h => haversine(h.lat, h.lon, r.lat, r.lon))
       LabeledRecord(r.user_id, r.event_id, r.ts, r.lat, r.lon, r.binning, cid, dfh)
     }
-    (records, clusters.toSeq)
+    (records, clusters)
+  }
+
+  /** DBSCAN `pts` into clusters x<first+label>: (labels, each cluster's
+    * center stats in label order) — the x<k> numbering of gps.py:1199-1217.
+    */
+  private def xClusters(user: Long, pts: Seq[(Double, Double)], first: Int,
+                        eps: Double, minSamples: Int): (Array[Int], Seq[ClusterRow]) = {
+    val xy = pts.toArray
+    val labels = Dbscan.run(xy, eps, minSamples)
+    (labels, labels.distinct.filter(_ != -1).sorted.toSeq.map { l =>
+      centerStats(user, s"x${first + l}", xy.indices.filter(labels(_) == l).map(xy))
+    })
   }
 
   /** Next-phase clusters (get_next_phase_clusters, gps.py:1507-1561): per
@@ -245,18 +224,12 @@ object Clustering {
     byDay.keys.toSeq.sorted.foreach { day =>
       val candidates = byDay(day).filter(r =>
         !centers.exists { case (cl, co) => haversine(r.lat, r.lon, cl, co) < minDistance })
-      val labels = Dbscan.run(candidates.map(r => (r.lat, r.lon)).toArray, eps, minSamples)
-      val found = labels.distinct.filter(_ != -1).sorted
-      if (found.nonEmpty) {
-        candidates.indices.foreach { i =>
-          if (labels(i) != -1) cids(candidates(i).event_id) = s"x${nextCid + labels(i)}"
-        }
-        found.foreach { l =>
-          val members = candidates.indices.filter(labels(_) == l).map(i => (candidates(i).lat, candidates(i).lon))
-          newClusters += centerStats(user, s"x${nextCid + l}", members)
-        }
-        nextCid += found.length
+      val (labels, found) = xClusters(user, candidates.map(r => (r.lat, r.lon)), nextCid, eps, minSamples)
+      candidates.indices.foreach { i =>
+        if (labels(i) != -1) cids(candidates(i).event_id) = s"x${nextCid + labels(i)}"
       }
+      newClusters ++= found
+      nextCid += found.length
     }
     (records.map(r => r.copy(cid = cids(r.event_id))), clusters ++ newClusters)
   }
@@ -272,20 +245,8 @@ object Clustering {
     */
   def contextTagged(points: DataFrame,
                     eps: Double = 0.005, minSamples: Int = 100, fence: Double = 500.0)
-      : Dataset[ContextOut] = {
-    val spark = points.sparkSession
-    import spark.implicits._
-    points
-      .select(col("user_id").cast("long"), col("event_id").cast("long"),
-        col("ts"), col("lat"), col("lon"), col("binning"))
-      .as[EnrichedPoint]
-      .groupByKey(_.user_id)
-      .flatMapGroups { (u, it) =>
-        val (rs, cs) = contextForUser(u, it.toSeq, eps, minSamples, fence)
-        rs.iterator.map(r => ContextOut(Some(r), None)) ++
-          cs.iterator.map(c => ContextOut(None, Some(c)))
-      }
-  }
+      : Dataset[ContextOut] =
+    taggedPerUser(points)((u, rows) => contextForUser(u, rows, eps, minSamples, fence))
 
   /** Both phases (contextForUser → nextPhaseForUser, gps.py:1103-1270 +
     * 1507-1561) in ONE flatMapGroups pass: the phase-1 records/clusters
@@ -297,6 +258,18 @@ object Clustering {
   def nextPhaseTagged(points: DataFrame,
                       eps: Double = 0.005, minSamples: Int = 100, fence: Double = 500.0,
                       eps2: Double = 0.005, minSamples2: Int = 10, minDistance: Double = 100.0)
+      : Dataset[ContextOut] =
+    taggedPerUser(points) { (u, rows) =>
+      val (recs, clus) = contextForUser(u, rows, eps, minSamples, fence)
+      nextPhaseForUser(recs, clus, eps2, minSamples2, minDistance)
+    }
+
+  /** The per-user plumbing of [[contextTagged]] and [[nextPhaseTagged]]:
+    * typed points → groupByKey(user_id) → `run` per user, its records and
+    * clusters emitted as tagged rows.
+    */
+  private def taggedPerUser(points: DataFrame)(
+      run: (Long, Seq[EnrichedPoint]) => (Seq[LabeledRecord], Seq[ClusterRow]))
       : Dataset[ContextOut] = {
     val spark = points.sparkSession
     import spark.implicits._
@@ -306,10 +279,9 @@ object Clustering {
       .as[EnrichedPoint]
       .groupByKey(_.user_id)
       .flatMapGroups { (u, it) =>
-        val (recs, clus) = contextForUser(u, it.toSeq, eps, minSamples, fence)
-        val (recs2, all) = nextPhaseForUser(recs, clus, eps2, minSamples2, minDistance)
-        recs2.iterator.map(r => ContextOut(Some(r), None)) ++
-          all.iterator.map(c => ContextOut(None, Some(c)))
+        val (rs, cs) = run(u, it.toSeq)
+        rs.iterator.map(r => ContextOut(Some(r), None)) ++
+          cs.iterator.map(c => ContextOut(None, Some(c)))
       }
   }
 
@@ -370,17 +342,13 @@ object Clustering {
     def foldSum(arr: Column): Column =
       aggregate(arr, lit(0.0), (acc, v) => acc + v)
     // np.percentile linear interpolation at fraction-of-percent q
-    def pctl(sorted: Column, n: Column, q: Double): (Column, Column) = {
+    def interp(sorted: Column, n: Column, q: Double): Column = {
       val pos = lit(q) * (n - 1).cast("double")
       val lo = floor(pos)
-      (pos - lo.cast("double"), lo)
-    }
-    def interp(sorted: Column, n: Column, q: Double): Column = {
-      val (frac, lo) = pctl(sorted, n, q)
       val hi = least(lo + 1, n - 1)
       val elo = element_at(sorted, (lo + 1).cast("int"))
       val ehi = element_at(sorted, (hi + 1).cast("int"))
-      elo + (ehi - elo) * frac
+      elo + (ehi - elo) * (pos - lo.cast("double"))
     }
     val g = cores.toDF()
       .groupBy(col("user_id"), col("label").cast("long").as("label"))
@@ -422,22 +390,11 @@ object Clustering {
         "lat_mean", "lon_mean", "lat_iqr", "lon_iqr", "lat_std", "lon_std", "max_dist_m")
   }
 
-  // the most recent persisted tagged frame; each clustersWithContext call
-  // releases its predecessor so repeated invocations (bench rounds, long
-  // sessions) hold at most ONE cached copy instead of accumulating blocks
-  // until the ContextCleaner happens to reclaim them
-  @volatile private var lastTagged: Dataset[ContextOut] = null
-
   /** Distributed wiring: one shuffle on user_id; all sequential reference
-    * semantics run inside each group — in a SINGLE group pass. The tagged
-    * frame is lazily persisted so that a consumer of both outputs (e.g. the
-    * full §3.1 pipeline) re-sorts and re-DBSCANs each user once, not twice;
-    * single-output consumers pay nothing extra beyond the cache write.
-    *
-    * Cache ownership: the persist is released on the NEXT call (or by an
-    * explicit `sparkSession.sharedState.cacheManager.clearCache()`, which
-    * Bench runs between queries); consumers of a previous call's Datasets
-    * simply recompute if they outlive it.
+    * semantics run inside each group. The two outputs are filtered views of
+    * ONE [[contextTagged]] frame, with no persist: each view that is
+    * consumed runs the per-user pass. A consumer of both outputs that needs
+    * a single pass reads [[contextTagged]] itself.
     */
   def clustersWithContext(points: DataFrame,
                           eps: Double = 0.005, minSamples: Int = 100, fence: Double = 500.0)
@@ -445,13 +402,7 @@ object Clustering {
     val spark = points.sparkSession
     import spark.implicits._
     val tagged = contextTagged(points, eps, minSamples, fence)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    synchronized {
-      if (lastTagged != null) lastTagged.unpersist(blocking = false)
-      lastTagged = tagged
-    }
-    val records  = tagged.where(col("rec").isNotNull).select(col("rec.*")).as[LabeledRecord]
-    val clusters = tagged.where(col("clu").isNotNull).select(col("clu.*")).as[ClusterRow]
-    (records, clusters)
+    (tagged.where(col("rec").isNotNull).select(col("rec.*")).as[LabeledRecord],
+      tagged.where(col("clu").isNotNull).select(col("clu.*")).as[ClusterRow])
   }
 }

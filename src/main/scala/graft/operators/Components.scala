@@ -28,7 +28,7 @@ object Components {
     * corpus, so the common case is one collect instead of O(log diameter)
     * join rounds.
     */
-  def assign(nodes: DataFrame, edges: DataFrame, maxIters: Int = 50): DataFrame = {
+  def assign(nodes: DataFrame, edges: DataFrame): DataFrame = {
     val spark = nodes.sparkSession
     val maxEdges = spark.conf.getOption("graft.cc.unionFindMaxEdges")
       .map(_.toLong).getOrElse(5_000_000L)
@@ -65,15 +65,20 @@ object Components {
       import spark.implicits._
       val roots = nodeRows.map(r => { val u = r.getLong(0); (u, find(u)) })
       roots.toSeq.toDF("uid", "comp")
-    } else minLabel(nodes, edges, maxIters)
+    } else minLabel(nodes, edges)
   }
 
+  /** The distributed loop, at most `maxIters` rounds. Labels still changing
+    * in the last round throw IllegalStateException (rounds run, labels that
+    * moved) — unconverged labels are never returned as components.
+    */
   def minLabel(nodes: DataFrame, edges: DataFrame, maxIters: Int = 50): DataFrame = {
+    require(maxIters > 0, "maxIters must be positive")
     var comp = nodes.select(col("uid"), col("uid").as("comp"))
       .localCheckpoint(eager = true)
-    var converged = false
+    var changed = -1L // labels moved in the last probed round
     var iter = 0
-    while (!converged && iter < maxIters) {
+    while (changed != 0L && iter < maxIters) {
       val viaNeighbors = edges
         .join(comp.withColumnRenamed("uid", "b_uid").withColumnRenamed("comp", "nc"), Seq("b_uid"))
         .groupBy(col("a_uid").as("uid"))
@@ -93,9 +98,12 @@ object Components {
       // probe convergence every 2nd round only — a cheap scan over the
       // local checkpoint, half as many probe jobs as checking every round
       if (iter % 2 == 0 || iter >= maxIters)
-        converged = halved.where(col("comp") =!= col("old")).count() == 0L
+        changed = halved.where(col("comp") =!= col("old")).count()
       comp = halved.select("uid", "comp")
     }
+    if (changed != 0L)
+      throw new IllegalStateException(s"connected components did not converge in " +
+        s"$iter rounds: $changed labels still changing")
     comp
   }
 }

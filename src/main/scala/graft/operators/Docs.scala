@@ -1,6 +1,7 @@
 package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** Training-data text-pipeline operators over the `documents` table:
@@ -21,6 +22,20 @@ object Docs {
   def substrCount(text: Column, pat: String): Column =
     (length(text) - length(regexp_replace(text, java.util.regex.Pattern.quote(pat), ""))) / pat.length
 
+  /** The whitespace tokenizer of every token rule (limit -1; trim strips
+    * 0x20 only, so "" is ONE empty token). TextImpl.tokens and the DuckDB
+    * twins' regexp_split_to_array(trim(text), '\\s+') mirror it exactly.
+    */
+  def tokens(text: Column): Column = split(trim(text), "\\s+")
+
+  /** Characters per token — one int/int IEEE division, exact cross-engine. */
+  private def charsPerToken(text: Column): Column =
+    length(text).cast("double") / size(tokens(text)).cast("double")
+
+  /** Distinct tokens over all tokens — one int/int IEEE division. */
+  private def distinctRatio(text: Column): Column =
+    size(array_distinct(tokens(text))).cast("double") / size(tokens(text)).cast("double")
+
   /** Exact duplicate groups: md5 over the document text. At scale: single
     * shuffle on the 128-bit digest (uniform keys — no skew), map-side
     * partial counts.
@@ -33,8 +48,7 @@ object Docs {
 
   /** Exact dedup: keep the lowest doc_id per distinct text. */
   def dedupExact(docs: DataFrame): DataFrame = {
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(md5(col("text").cast("binary"))).orderBy("doc_id")
+    val w = Window.partitionBy(md5(col("text").cast("binary"))).orderBy("doc_id")
     docs.withColumn("rn", row_number().over(w)).where(col("rn") === 1).drop("rn")
   }
 
@@ -65,22 +79,15 @@ object Docs {
   def filterPipeline(docs: DataFrame,
                      minTokens: Int = PipelineMinTokens,
                      maxTokens: Int = PipelineMaxTokens): DataFrame = {
-    val toks = split(trim(col("text")), "\\s+")
     val gated = dedupExact(docs)
-      .withColumn("n_tokens", size(toks).cast("long"))
-      .withColumn("chars_per_token",
-        length(col("text")).cast("double") / size(toks).cast("double"))
-      .withColumn("distinct_ratio",
-        size(array_distinct(toks)).cast("double") / size(toks).cast("double"))
+      .withColumn("n_tokens", size(tokens(col("text"))).cast("long"))
+      .withColumn("chars_per_token", charsPerToken(col("text")))
+      .withColumn("distinct_ratio", distinctRatio(col("text")))
       .where(col("n_tokens").between(minTokens, maxTokens) &&
         col("chars_per_token") < lit(PipelineMaxCharsPerToken) &&
         col("distinct_ratio") > lit(PipelineMinDistinctRatio))
     val langs = LangMarkers.keys.toSeq.sorted
-    val padded = concat(lit(" "), col("text"), lit(" "))
-    val scored = langs.foldLeft(gated) { (df, l) =>
-      df.withColumn(s"s_$l",
-        LangMarkers(l).map(p => substrCount(padded, p)).reduce(_ + _).cast("long"))
-    }
+    val scored = withLangScores(gated, "s_")
     val best = greatest(langs.map(l => col(s"s_$l")): _*)
     val pred = when(best <= 0, lit("und"))
       .otherwise(coalesce(langs.map(l => when(col(s"s_$l") === best, lit(l))): _*))
@@ -90,27 +97,9 @@ object Docs {
         sum("n_tokens").as("tokens_sum"))
   }
 
-  /** Word-shingles of size n from a pre-tokenized array column — the HOF
-    * reference formulation, retained as the executable spec the compiled
-    * kernel is pinned against (TextKernelSpec). The token array MUST be a
-    * materialized column reference (not an inline split): expressions
-    * referenced inside HOF lambdas are re-evaluated per element, so an
-    * inline regex split would turn this O(n) pass into O(n²) splits.
-    */
-  def shinglesFromTokens(toks: Column, n: Int): Column =
-    array_distinct(
-      filter(
-        transform(sequence(lit(0), greatest(size(toks) - n, lit(0))),
-          i => when(size(toks) >= n, concat_ws(" ", slice(toks, i + 1, lit(n))))),
-        s => s.isNotNull))
-
-  /** HOF twin of [[shingles]] (parity spec only — interpreted per element). */
-  def shinglesHof(text: Column, n: Int): Column =
-    shinglesFromTokens(split(trim(text), "\\s+"), n)
-
-  /** Word-shingles of size n from whitespace-tokenized text, via the
-    * compiled single-pass kernel (graft.functions.Text.shingles — the HOF
-    * formulation above evaluates interpreted per element).
+  /** Word-shingles of size n from [[tokens]], via the compiled single-pass
+    * kernel graft.functions.Text.shingles; its interpreted Column-HOF form
+    * is the parity spec HofTwins.shingles in the tests (TextKernelSpec).
     */
   def shingles(text: Column, n: Int): Column =
     graft.functions.Text.shingles(text, n)
@@ -146,10 +135,14 @@ object Docs {
     * candidates by construction) instead of losing the recall invisibly.
     * Run [[dedupExact]] FIRST — identical docs are the main source of
     * mega-buckets.
+    *
+    * Building the frame runs a Spark job: the band-row frame is eagerly
+    * localCheckpointed. Its blocks stay until the frame is unreachable and the
+    * ContextCleaner drops them; `cacheManager.clearCache()` does not free them.
     */
   def minHashCandidates(signatures: DataFrame, bands: Int = 4,
                         maxBucket: Int = 10000): DataFrame =
-    pairBuckets(bandRows(signatures, bands), maxBucket)
+    pairBuckets(bandRows(signatures, bandHashes(col("signature"), bands)), maxBucket)
       .select(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"))
       .distinct()
 
@@ -168,12 +161,11 @@ object Docs {
     array((0 until bands).map(b => xxhash64(slice(signature, b * bandSize + 1, bandSize))): _*)
   }
 
-  /** (doc_id, band_idx, band_hash) rows — the LSH banding shared by
-    * [[minHashCandidates]] and [[cappedBuckets]].
+  /** (doc_id, band_idx, band_hash) rows of a band-hash array — the LSH
+    * banding of both MinHash families and [[cappedBuckets]].
     */
-  private def bandRows(signatures: DataFrame, bands: Int): DataFrame =
-    signatures.select(col("doc_id"),
-      posexplode(bandHashes(col("signature"), bands)).as(Seq("band_idx", "band_hash")))
+  private def bandRows(signatures: DataFrame, hashes: Column): DataFrame =
+    signatures.select(col("doc_id"), posexplode(hashes).as(Seq("band_idx", "band_hash")))
 
   private def bucketSizes(rows: DataFrame): DataFrame =
     rows.groupBy("band_idx", "band_hash").agg(count(lit(1)).as("bucket_n"))
@@ -206,7 +198,8 @@ object Docs {
     */
   def cappedBuckets(signatures: DataFrame, bands: Int = 4,
                     maxBucket: Int = 10000): DataFrame =
-    bucketSizes(bandRows(signatures, bands)).where(col("bucket_n") > maxBucket)
+    bucketSizes(bandRows(signatures, bandHashes(col("signature"), bands)))
+      .where(col("bucket_n") > maxBucket)
 
   /** md5-as-integer: first 15 hex chars (60 bits — fits a signed BIGINT in
     * both engines) of md5, parsed base-16. DuckDB recomputes it exactly; the
@@ -221,8 +214,8 @@ object Docs {
     * a shingle s = md5Long("i|" ++ s); signature element = min over the
     * doc's distinct 3-gram shingles (Long.MaxValue for docs with < 3
     * tokens — same sentinel both engines). Runs as ONE compiled
-    * tokenize→shingle→hash→min pass (graft.functions.Text.minHashMd5); the
-    * HOF formulation is retained below as [[minHashMd5SignatureHof]].
+    * tokenize→shingle→hash→min pass (graft.functions.Text.minHashMd5); its
+    * HOF formulation is the parity spec HofTwins.minHashMd5Signature (tests).
     * The kernel output is staged as its own projection so the 4 mh_i
     * references don't inline (CollapseProject keeps non-cheap aliases).
     */
@@ -231,24 +224,15 @@ object Docs {
       .select(col("doc_id"), graft.functions.Text.minHashMd5(col("text"), numHashes).as("__sig"))
       .select(col("doc_id") +: (0 until numHashes).map(i => col("__sig")(i).as(s"mh_$i")): _*)
 
-  /** HOF twin of [[minHashMd5Signature]] (parity spec only). */
-  def minHashMd5SignatureHof(docs: DataFrame, numHashes: Int = 4): DataFrame = {
-    val withSh = docs
-      .select(col("doc_id"), split(trim(col("text")), "\\s+").as("toks"))
-      .select(col("doc_id"), shinglesFromTokens(col("toks"), 3).as("sh"))
-    val sigCols = (0 until numHashes).map { i =>
-      aggregate(
-        transform(col("sh"), s => md5Long(concat(lit(s"$i|"), s))),
-        lit(Long.MaxValue), (acc, v) => least(acc, v)).as(s"mh_$i")
-    }
-    withSh.select(col("doc_id") +: sigCols: _*)
-  }
-
   /** LSH banding + bucket cap + candidate pairing over the md5 signatures —
     * identical mechanics to [[minHashCandidates]] (band hash over the band's
     * signature slice, buckets above maxBucket dropped, doc_a < doc_b pairs)
     * with every hash DuckDB-recomputable. Output adds n_shared_bands for a
     * tighter pin. Bands of 2 hashes each.
+    *
+    * Building the frame runs a Spark job: the band-row frame is eagerly
+    * localCheckpointed. Its blocks stay until the frame is unreachable and the
+    * ContextCleaner drops them; `cacheManager.clearCache()` does not free them.
     */
   def minHashMd5Candidates(signatures: DataFrame, numHashes: Int = 4,
                            maxBucket: Int = 100): DataFrame = {
@@ -256,9 +240,7 @@ object Docs {
       md5Long(concat_ws(",",
         col(s"mh_${2 * b}").cast("string"), col(s"mh_${2 * b + 1}").cast("string")))
     }
-    val rows = signatures.select(
-      col("doc_id"), posexplode(array(bandCols: _*)).as(Seq("band_idx", "band_hash")))
-    pairBuckets(rows, maxBucket)
+    pairBuckets(bandRows(signatures, array(bandCols: _*)), maxBucket)
       .groupBy(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"))
       .agg(count(lit(1)).as("n_shared_bands"))
   }
@@ -269,6 +251,10 @@ object Docs {
     * symmetrized here; the component loop is the shared
     * [[Components.minLabel]] kernel. Returns (doc_id, rep) for every doc
     * that appears in at least one candidate pair.
+    *
+    * Building the frame runs a Spark job: the symmetrized edge set is eagerly
+    * localCheckpointed. Its blocks stay until the frame is unreachable and the
+    * ContextCleaner drops them; `cacheManager.clearCache()` does not free them.
     */
   def nearDupClusters(cands: DataFrame): DataFrame = {
     // materialize the edge set ONCE: the candidate pipeline upstream is the
@@ -310,26 +296,11 @@ object Docs {
   /** SimHash (64-bit) over whitespace tokens: sign-sum of per-token xxhash64
     * bits weighted by term frequency; near-dups have small Hamming distance.
     * One compiled tokenize→hash→sign-sum→pack pass (Text.simHashXx): the HOF
-    * formulation ([[simHashHof]]) evaluated 64 boxed counter updates PER
-    * TOKEN, interpreted.
+    * formulation (the parity spec HofTwins.simHash in the tests) evaluated
+    * 64 boxed counter updates PER TOKEN, interpreted.
     */
   def simHash(docs: DataFrame): DataFrame =
     docs.select(col("doc_id"), graft.functions.Text.simHashXx(col("text")).as("simhash"))
-
-  /** HOF twin of [[simHash]] (parity spec only). */
-  def simHashHof(docs: DataFrame): DataFrame = {
-    val toks = split(trim(col("text")), "\\s+")
-    val hashes = transform(toks, t => xxhash64(t))
-    val zeros = array_repeat(lit(0L), 64)
-    val counters = aggregate(hashes, zeros, (acc, h) =>
-      zip_with(acc, sequence(lit(0), lit(63)),
-        (a, b) => a + when(call_function("shiftright", h, b.cast("int")).bitwiseAND(1L) === 1L, 1L).otherwise(-1L)))
-    val packed = aggregate(
-      zip_with(counters, sequence(lit(0), lit(63)),
-        (c, b) => when(c > 0, call_function("shiftleft", lit(1L), b.cast("int"))).otherwise(lit(0L))),
-      lit(0L), (acc, v) => acc.bitwiseOR(v))
-    docs.select(col("doc_id"), packed.as("simhash"))
-  }
 
   /** md5-variant SimHash (oracle twin of [[simHash]]): identical
     * tokenize→hash→sign-sum→pack mechanics with the per-token hash swapped
@@ -339,21 +310,6 @@ object Docs {
     */
   def simHashMd5(docs: DataFrame): DataFrame =
     docs.select(col("doc_id"), graft.functions.Text.simHashMd5(col("text")).as("simhash_md5"))
-
-  /** HOF twin of [[simHashMd5]] (parity spec only). */
-  def simHashMd5Hof(docs: DataFrame): DataFrame = {
-    val toks = split(trim(col("text")), "\\s+")
-    val hashes = transform(toks, t => md5Long(t))
-    val zeros = array_repeat(lit(0L), 60)
-    val counters = aggregate(hashes, zeros, (acc, h) =>
-      zip_with(acc, sequence(lit(0), lit(59)),
-        (a, b) => a + when(call_function("shiftright", h, b.cast("int")).bitwiseAND(1L) === 1L, 1L).otherwise(-1L)))
-    val packed = aggregate(
-      zip_with(counters, sequence(lit(0), lit(59)),
-        (c, b) => when(c > 0, call_function("shiftleft", lit(1L), b.cast("int"))).otherwise(lit(0L))),
-      lit(0L), (acc, v) => acc.bitwiseOR(v))
-    docs.select(col("doc_id"), packed.as("simhash_md5"))
-  }
 
   /** Language-ID heuristic: per-language stopword occurrence score from
     * substring counts (pure arithmetic — oracle-expressible); argmax wins.
@@ -365,30 +321,35 @@ object Docs {
     "es" -> Seq(" el ", " y ", " los "),
     "zh" -> Seq(" de ", " shi ", " zhong "))
 
-  def langScores(docs: DataFrame): DataFrame = {
+  /** Per language (sorted), a `<prefix><lang>` column: the long sum of its
+    * marker counts in the space-padded text.
+    */
+  private def withLangScores(docs: DataFrame, prefix: String): DataFrame = {
     val padded = concat(lit(" "), col("text"), lit(" "))
-    val scored = LangMarkers.toSeq.sortBy(_._1).foldLeft(docs) { case (df, (lang, pats)) =>
-      df.withColumn(s"score_$lang",
-        pats.map(p => substrCount(padded, p)).reduce(_ + _).cast("long"))
+    LangMarkers.keys.toSeq.sorted.foldLeft(docs) { (df, l) =>
+      df.withColumn(prefix + l,
+        LangMarkers(l).map(p => substrCount(padded, p)).reduce(_ + _).cast("long"))
     }
-    scored.select(col("doc_id") +: col("lang").as("actual_lang") +:
-      LangMarkers.keys.toSeq.sorted.map(l => col(s"score_$l")): _*)
   }
+
+  def langScores(docs: DataFrame): DataFrame =
+    withLangScores(docs, "score_").select(col("doc_id") +: col("lang").as("actual_lang") +:
+      LangMarkers.keys.toSeq.sorted.map(l => col(s"score_$l")): _*)
 
   /** Quality-score features: length, word count, mean word length, distinct
     * token ratio, stopword ratio — the standard web-text filters, all pure
     * arithmetic over built-ins.
     */
   def qualityFeatures(docs: DataFrame): DataFrame = {
-    val toks = split(trim(col("text")), "\\s+")
+    val toks = tokens(col("text"))
     // ratios stay raw exact rationals: int/int division is one IEEE
     // rounding, bit-identical across engines (no decimal re-rounding).
     docs.select(
       col("doc_id"),
       length(col("text")).cast("long").as("n_chars_m"),
       size(toks).cast("long").as("n_tokens"),
-      (length(col("text")).cast("double") / size(toks).cast("double")).as("chars_per_token"),
-      (size(array_distinct(toks)).cast("double") / size(toks).cast("double")).as("distinct_ratio"),
+      charsPerToken(col("text")).as("chars_per_token"),
+      distinctRatio(col("text")).as("distinct_ratio"),
       (substrCount(concat(lit(" "), col("text"), lit(" ")), " the ").cast("double")
         / size(toks).cast("double")).as("the_ratio"))
   }
@@ -411,13 +372,18 @@ object Docs {
   val DefaultSampleSalt = 7L
 
   def splitAssign(docs: DataFrame, trainPct: Int = DefaultTrainPct,
-                  valPct: Int = DefaultValPct): DataFrame = {
-    val bucket = pmod(xxhash64(col("doc_id")), lit(100L))
-    docs.select(col("doc_id"), bucket.as("bucket"),
-      when(bucket < trainPct, lit("train"))
-        .when(bucket < trainPct + valPct, lit("val"))
-        .otherwise(lit("test")).as("split"))
-  }
+                  valPct: Int = DefaultValPct): DataFrame =
+    docs.select(col("doc_id"), splitBucket.as("bucket"),
+      splitLabel(trainPct, valPct).as("split"))
+
+  /** The split bucket of a document: pmod(xxhash64(doc_id), 100). */
+  private def splitBucket: Column = pmod(xxhash64(col("doc_id")), lit(100L))
+
+  /** train below trainPct, val below trainPct+valPct, test above. */
+  private def splitLabel(trainPct: Int, valPct: Int): Column =
+    when(splitBucket < trainPct, lit("train"))
+      .when(splitBucket < trainPct + valPct, lit("val"))
+      .otherwise(lit("test"))
 
   /** Default per-language keep rates (out of 10 000) for
     * [[sampleStratified]] — the CCNet/C4-style language rebalancing step
@@ -471,7 +437,7 @@ object Docs {
     * multiplies rows at most ×3 and stays partition-local).
     */
   def mixEpochs(docs: DataFrame): DataFrame = {
-    val toks = split(trim(col("text")), "\\s+")
+    val toks = tokens(col("text"))
     val perSource = docs
       .select(col("source"), size(toks).cast("long").as("n_tokens"),
         size(array_distinct(toks)).cast("long").as("n_distinct"))
@@ -515,26 +481,8 @@ object Docs {
     */
   def decontam(docs: DataFrame, n: Int = DecontamNgram,
                trainPct: Int = DefaultTrainPct,
-               valPct: Int = DefaultValPct): DataFrame = {
-    val isBench = pmod(xxhash64(col("doc_id")), lit(100L)) >= (trainPct + valPct)
-    val tagged = docs.select(col("doc_id"),
-      graft.functions.Text.shingles(col("text"), n).as("grams"),
-      isBench.as("is_bench"))
-    val benchGrams = tagged.where(col("is_bench"))
-      .select(explode(col("grams")).as("gram")).distinct()
-      .withColumn("bh", lit(1L))
-    val trainGrams = tagged.where(!col("is_bench"))
-      .select(col("doc_id"), explode(col("grams")).as("gram"))
-    val hits = trainGrams.join(benchGrams, Seq("gram"), "left")
-      .groupBy("doc_id")
-      .agg(sum(coalesce(col("bh"), lit(0L))).as("n_hit_grams"))
-    tagged.where(!col("is_bench")).select(col("doc_id"))
-      .join(hits, Seq("doc_id"), "left")
-      .select(col("doc_id"),
-        coalesce(col("n_hit_grams"), lit(0L)).as("n_hit_grams"),
-        (coalesce(col("n_hit_grams"), lit(0L)) > 0).cast("long")
-          .as("contaminated"))
-  }
+               valPct: Int = DefaultValPct): DataFrame =
+    decontamWith(docs, n, trainPct, valPct)((_, trainGrams) => trainGrams)
 
   /** The 100 TB hardening [[decontam]]'s Scaladoc promises, made real:
     * the same contamination semantics with a BLOOM prefilter on the gram
@@ -560,24 +508,32 @@ object Docs {
     import org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate
     import org.apache.spark.sql.graft.ColumnBridge
     import org.apache.spark.sql.types.BinaryType
-    val isBench = pmod(xxhash64(col("doc_id")), lit(100L)) >= (trainPct + valPct)
+    decontamWith(docs, n, trainPct, valPct) { (benchGrams, trainGrams) =>
+      val bfAgg = new BloomFilterAggregate(
+        ColumnBridge.expression(xxhash64(col("gram"))),
+        Literal(expectedGrams), Literal(numBits)).toAggregateExpression()
+      val bloomBytes = benchGrams
+        .select(ColumnBridge.column(bfAgg).as("bf")).head.getAs[Array[Byte]](0)
+      trainGrams.where(ColumnBridge.column(BloomFilterMightContain(
+        Literal.create(bloomBytes, BinaryType),
+        ColumnBridge.expression(xxhash64(col("gram"))))))
+    }
+  }
+
+  /** The body of [[decontam]] and [[decontamBloom]]: `prefilter` maps the
+    * bench gram set (gram, bh) and the train (doc_id, gram) rows to the
+    * train rows that the exact gram join checks.
+    */
+  private def decontamWith(docs: DataFrame, n: Int, trainPct: Int, valPct: Int)(
+      prefilter: (DataFrame, DataFrame) => DataFrame): DataFrame = {
     val tagged = docs.select(col("doc_id"),
       graft.functions.Text.shingles(col("text"), n).as("grams"),
-      isBench.as("is_bench"))
+      (splitBucket >= (trainPct + valPct)).as("is_bench"))
     val benchGrams = tagged.where(col("is_bench"))
       .select(explode(col("grams")).as("gram")).distinct()
       .withColumn("bh", lit(1L))
-    val bfAgg = new BloomFilterAggregate(
-      ColumnBridge.expression(xxhash64(col("gram"))),
-      Literal(expectedGrams), Literal(numBits)).toAggregateExpression()
-    val bloomBytes = benchGrams
-      .select(ColumnBridge.column(bfAgg).as("bf")).head.getAs[Array[Byte]](0)
-    val mightContain = ColumnBridge.column(BloomFilterMightContain(
-      Literal.create(bloomBytes, BinaryType),
-      ColumnBridge.expression(xxhash64(col("gram")))))
-    val trainGrams = tagged.where(!col("is_bench"))
-      .select(col("doc_id"), explode(col("grams")).as("gram"))
-      .where(mightContain)
+    val trainGrams = prefilter(benchGrams, tagged.where(!col("is_bench"))
+      .select(col("doc_id"), explode(col("grams")).as("gram")))
     val hits = trainGrams.join(benchGrams, Seq("gram"), "left")
       .groupBy("doc_id")
       .agg(sum(coalesce(col("bh"), lit(0L))).as("n_hit_grams"))
@@ -607,14 +563,14 @@ object Docs {
     * exchange, so the shuffle carries at most cap·partitions rows per
     * source, not the whole corpus (plan-pinned in DocsSpec).
     */
-  def domainCap(docs: DataFrame, cap: Int = DefaultDomainCap): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val w = Window.partitionBy(col("source"))
-      .orderBy(xxhash64(col("doc_id")).asc, col("doc_id").asc)
+  def domainCap(docs: DataFrame, cap: Int = DefaultDomainCap): DataFrame =
     docs.select(col("doc_id"), col("source"))
-      .withColumn("rk", row_number().over(w).cast("long"))
+      .withColumn("rk", domainRank.cast("long"))
       .where(col("rk") <= cap)
-  }
+
+  /** A document's rank within its source by (xxhash64(doc_id), doc_id). */
+  private def domainRank: Column = row_number().over(Window.partitionBy(col("source"))
+    .orderBy(xxhash64(col("doc_id")).asc, col("doc_id").asc))
 
   /** Packing parameters for [[packSequences]] — tokens per packed training
     * sequence and the shard fan-out (interpolated into the SQL twin).
@@ -637,17 +593,22 @@ object Docs {
     */
   def packSequences(docs: DataFrame, budget: Int = PackBudget,
                     shards: Int = PackShards): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val n = size(split(trim(col("text")), "\\s+")).cast("long")
-    val base = docs.select(col("doc_id"), n.as("n_tokens"),
-      pmod(xxhash64(col("doc_id")), lit(shards.toLong)).as("shard"))
+    val n = size(tokens(col("text"))).cast("long")
+    val base = docs.select(col("doc_id"), n.as("n_tokens"), packShard(shards).as("shard"))
     val w = Window.partitionBy(col("shard")).orderBy(col("doc_id"))
     base.withColumn("end_off", sum(col("n_tokens")).over(w))
       .select(col("doc_id"), col("shard"), col("n_tokens"),
         (col("end_off") - col("n_tokens")).as("start_off"),
-        ((col("end_off") - col("n_tokens")) - pmod(col("end_off") - col("n_tokens"), lit(budget.toLong)))
-          .divide(lit(budget.toLong)).cast("long").as("seq_id"))
+        seqIndex(col("end_off") - col("n_tokens"), budget).as("seq_id"))
   }
+
+  /** The packing stream of a document: pmod(xxhash64(doc_id), shards). */
+  private def packShard(shards: Int): Column =
+    pmod(xxhash64(col("doc_id")), lit(shards.toLong))
+
+  /** Index of the `budget`-token sequence holding offset o: (o − o mod b) / b. */
+  private def seqIndex(startOff: Column, budget: Int): Column =
+    (startOff - pmod(startOff, lit(budget.toLong))).divide(lit(budget.toLong)).cast("long")
 
   /** Posting-list cap for [[invertedIndex]] — full postings are emitted
     * only for tokens with document frequency ≤ cap; hot tokens (stopwords)
@@ -670,7 +631,7 @@ object Docs {
     */
   def invertedIndex(docs: DataFrame, cap: Int = PostingsCap): DataFrame = {
     val tok = docs.select(col("doc_id"),
-      explode(array_distinct(split(trim(col("text")), "\\s+"))).as("token"))
+      explode(array_distinct(tokens(col("text")))).as("token"))
     val stats = tok.groupBy("token").agg(count(lit(1)).as("df"),
       min("doc_id").as("min_doc"), max("doc_id").as("max_doc"))
     val small = stats.where(col("df") <= cap).select("token")
@@ -723,17 +684,10 @@ object Docs {
   def assembleDataset(docs: DataFrame,
                       minTokens: Int = PipelineMinTokens,
                       maxTokens: Int = PipelineMaxTokens): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val toks = split(trim(col("text")), "\\s+")
-    val h = xxhash64(col("doc_id"))
-    val bucket = pmod(h, lit(100L))
     val tagged = dedupExact(docs)
-      .withColumn("n_tokens", size(toks).cast("long"))
+      .withColumn("n_tokens", size(tokens(col("text"))).cast("long"))
       .where(col("n_tokens").between(minTokens, maxTokens))
-      .withColumn("split",
-        when(bucket < DefaultTrainPct, lit("train"))
-          .when(bucket < DefaultTrainPct + DefaultValPct, lit("val"))
-          .otherwise(lit("test")))
+      .withColumn("split", splitLabel(DefaultTrainPct, DefaultValPct))
       .withColumn("grams", graft.functions.Text.shingles(col("text"), DecontamNgram))
       .select("doc_id", "source", "n_tokens", "split", "grams")
     val benchGrams = tagged.where(col("split") === "test")
@@ -745,17 +699,14 @@ object Docs {
     val kept = tagged.drop("grams")
       .join(contaminated.withColumnRenamed("doc_id", "bad_doc"),
         col("doc_id") === col("bad_doc"), "left_anti")
-    val capW = Window.partitionBy(col("source")).orderBy(h.asc, col("doc_id").asc)
-    val capped = kept.withColumn("rk", row_number().over(capW))
+    val capped = kept.withColumn("rk", domainRank)
       .where(col("rk") <= DefaultDomainCap).drop("rk")
     val packW = Window.partitionBy(col("split"), col("shard")).orderBy(col("doc_id"))
     val startOff = sum(col("n_tokens")).over(packW) - col("n_tokens")
-    capped.withColumn("shard", pmod(h, lit(PackShards.toLong)))
+    capped.withColumn("shard", packShard(PackShards))
       .withColumn("seq_key",
         when(col("split") === "train",
-          col("shard") * 1000000L +
-            (startOff - pmod(startOff, lit(PackBudget.toLong)))
-              .divide(lit(PackBudget.toLong)).cast("long")))
+          col("shard") * 1000000L + seqIndex(startOff, PackBudget)))
       .groupBy("split", "source")
       .agg(count(lit(1)).as("n_docs"), sum("n_tokens").as("tokens_sum"),
         min("doc_id").as("min_doc"), max("doc_id").as("max_doc"),
@@ -784,7 +735,7 @@ object Docs {
                 stride: Int = ChunkStride): DataFrame = {
     require(size > 0 && stride > 0, "chunk size and stride must be positive")
     docs
-      .withColumn("toks", split(trim(col("text")), "\\s+"))
+      .withColumn("toks", tokens(col("text")))
       .withColumn("n_tokens", org.apache.spark.sql.functions.size(col("toks")).cast("long"))
       .withColumn("chunk",
         explode(transform(
@@ -819,10 +770,14 @@ object Docs {
     * one join key, but it's a JOIN (AQE skew-split applies), not an agg
     * funnel. All counts exact integers; the ratio is ONE int/int IEEE
     * division after aggregation — bit-identical cross-engine.
+    *
+    * Building the frame runs a Spark job: the tf frame is eagerly
+    * localCheckpointed. Its blocks stay until the frame is unreachable and the
+    * ContextCleaner drops them; `cacheManager.clearCache()` does not free them.
     */
   def rareTokenRatio(docs: DataFrame, invFrac: Int = RareInvFrac): DataFrame = {
     val tok = docs.select(col("doc_id"),
-      explode(split(trim(col("text")), "\\s+")).as("token"))
+      explode(tokens(col("text"))).as("token"))
     // tf feeds BOTH the df derivation and the join's left side;
     // un-materialized, the text explode + partial agg ran twice (r6 plan:
     // two Generate+Scan subtrees). The checkpointed frame is the deduped
@@ -871,21 +826,12 @@ object Docs {
     * Compiled kernel — which also FIXES the expression formulation's latent
     * ANSI bug: under Spark 4 ANSI mode `acc * 31L` throws ARITHMETIC_OVERFLOW
     * for any text over 12 codepoints instead of wrapping (pinned in
-    * TextKernelSpec); the kernel wraps as documented.
+    * TextKernelSpec against the test object HofTwins.fingerprint); the
+    * kernel wraps as documented.
     */
   def fingerprint(docs: DataFrame): DataFrame =
     docs.select(col("doc_id"),
       graft.functions.Text.fingerprintWrap(col("text")).as("fingerprint"))
-
-  /** HOF twin of [[fingerprint]] (parity spec only). */
-  def fingerprintHof(docs: DataFrame): DataFrame = {
-    val chars = split(col("text"), "")
-    val poly = aggregate(
-      filter(chars, c => length(c) > 0),
-      lit(0L),
-      (acc, c) => acc * 31L + ascii(c).cast("long"))
-    docs.select(col("doc_id"), poly.as("fingerprint"))
-  }
 
   /** Token counts: whitespace tokens plus a BPE-ish regex segmentation
     * (letter runs / digit runs / punctuation runs, each absorbing one
@@ -898,44 +844,22 @@ object Docs {
   def tokenCounts(docs: DataFrame): DataFrame =
     docs.select(
       col("doc_id"),
-      size(split(trim(col("text")), "\\s+")).cast("long").as("n_ws"),
+      size(tokens(col("text"))).cast("long").as("n_ws"),
       size(regexp_extract_all(col("text"), lit(BpeishPattern), lit(0))).cast("long").as("n_bpe"))
 
   /** Winnowing fingerprint summary (the MOSS scheme): hash every k-char
     * gram, take the minimum of each w-gram window, keep the distinct
     * minima — the standard near-dup fingerprint set whose size is
-    * ~2/(w+1) of the grams. Grams are materialized as their own projection
-    * before the window pass (a lambda referencing an outer expression
-    * re-evaluates it PER ELEMENT — the O(n²) HOF trap). Summary per doc:
-    * distinct-fingerprint count and min/max fingerprint (null when the
-    * text is shorter than k + w − 1).
+    * ~2/(w+1) of the grams. One compiled pass (Text.winnow); its HOF
+    * formulation is the parity spec HofTwins.winnowSummary in the tests.
+    * Summary per doc: distinct-fingerprint count and min/max fingerprint
+    * (null when the text is shorter than k + w − 1).
     */
   def winnowSummary(docs: DataFrame, k: Int = 8, w: Int = 4): DataFrame =
     docs
       .select(col("doc_id"), graft.functions.Text.winnow(col("text"), k, w).as("__w"))
       .select(col("doc_id"), col("__w.n_fp").as("n_fp"),
         col("__w.min_fp").as("min_fp"), col("__w.max_fp").as("max_fp"))
-
-  /** HOF twin of [[winnowSummary]] (parity spec only). */
-  def winnowSummaryHof(docs: DataFrame, k: Int = 8, w: Int = 4): DataFrame = {
-    val n = length(col("text"))
-    val gramsExpr = when(n >= k,
-      transform(sequence(lit(1), n - lit(k - 1)), i =>
-        md5Long(col("text").substr(i, lit(k)))))
-      .otherwise(array().cast("array<long>"))
-    val withG = docs.select(col("doc_id"), gramsExpr.as("grams"))
-    val m = size(col("grams"))
-    val fpsExpr = when(m >= w,
-      transform(sequence(lit(1), m - lit(w - 1)), j =>
-        aggregate(slice(col("grams"), j, lit(w)), lit(Long.MaxValue),
-          (acc, v) => least(acc, v))))
-      .otherwise(array().cast("array<long>"))
-    withG.select(col("doc_id"), fpsExpr.as("fps"))
-      .select(col("doc_id"),
-        size(array_distinct(col("fps"))).cast("long").as("n_fp"),
-        array_min(col("fps")).as("min_fp"),
-        array_max(col("fps")).as("max_fp"))
-  }
 
   /** Oracle-expressible fingerprint twin: the same base-31 polynomial
     * rolling hash confined to Z_p (p = 1e9+7). The wrapping-Long production
@@ -947,14 +871,4 @@ object Docs {
   def fingerprintMod(docs: DataFrame, p: Long = 1000000007L): DataFrame =
     docs.select(col("doc_id"),
       graft.functions.Text.fingerprintMod(col("text"), p).as("fingerprint_mod"))
-
-  /** HOF twin of [[fingerprintMod]] (parity spec only). */
-  def fingerprintModHof(docs: DataFrame, p: Long = 1000000007L): DataFrame = {
-    val chars = split(col("text"), "")
-    val poly = aggregate(
-      filter(chars, c => length(c) > 0),
-      lit(0L),
-      (acc, c) => pmod(acc * lit(31L) + ascii(c).cast("long"), lit(p)))
-    docs.select(col("doc_id"), poly.as("fingerprint_mod"))
-  }
 }

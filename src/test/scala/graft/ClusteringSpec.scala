@@ -2,7 +2,7 @@ package graft
 
 import java.sql.Timestamp
 import org.apache.spark.sql.functions._
-import graft.operators.{Clustering, Dbscan, DistributedDbscan}
+import graft.operators.{Clustering, Components, Dbscan, DistributedDbscan}
 
 /** Clustering parity with the reference.
   * References: tests/test_gps.py:552-580 (home/work at exactly
@@ -244,6 +244,19 @@ class ClusteringSpec extends SparkSpec {
     assert(out.filter(_.user_id == 1L).map(_.event_id).sorted.toSeq === (0L until 40L))
     assert(out.filter(_.user_id == 2L).map(_.event_id).sorted.toSeq === (100L until 140L))
     assert(!out.exists(_.event_id == 500L))
+  }
+
+  test("distributed CC fails loudly at the round cap and converges by default (64-node path)") {
+    val nodes = (0L until 64L).toDF("uid")
+    val edges = (0L until 63L).flatMap(i => Seq((i, i + 1), (i + 1, i))).toDF("a_uid", "b_uid")
+    val e = intercept[IllegalStateException] {
+      Components.minLabel(nodes, edges, maxIters = 2)
+    }
+    assert(e.getMessage.contains("2 rounds"), e.getMessage)
+    assert(e.getMessage.matches(".*: [1-9][0-9]* labels still changing"), e.getMessage)
+    val comp = Components.minLabel(nodes, edges).as[(Long, Long)].collect()
+    assert(comp.map(_._1).sorted.toSeq === (0L until 64L))
+    assert(comp.forall(_._2 == 0L))
   }
 
   test("spark wiring: clustersWithContext runs per user") {

@@ -50,7 +50,7 @@ class PagesSpec extends SparkSpec {
     val df = cases.map(Tuple1(_)).toDF("h").withColumn("b", encode(col("h"), "UTF-8"))
     val rows = df.select(
       Pages.extractText(col("b")).as("fast"),
-      Pages.extractTextRegex(col("b")).as("spec")).collect()
+      HofTwins.extractTextRegex(col("b")).as("spec")).collect()
     rows.zip(cases).foreach { case (r, c) =>
       assert(r.getString(0) === r.getString(1), s"divergence for: $c")
     }
@@ -61,7 +61,7 @@ class PagesSpec extends SparkSpec {
     val pages = Pages.pagesFromGps(sources.Tables.gps(spark, "/root/testdata/sf0.001"))
     val diff = pages.select(
         Pages.extractText(col("html")).as("fast"),
-        Pages.extractTextRegex(col("html")).as("spec"))
+        HofTwins.extractTextRegex(col("html")).as("spec"))
       .where(col("fast") =!= col("spec")).count()
     assert(diff === 0L)
   }

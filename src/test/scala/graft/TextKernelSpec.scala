@@ -5,7 +5,8 @@ import org.apache.spark.sql.functions._
 import graft.operators.Docs
 
 /** Pins the compiled text kernels (graft.functions.TextImpl) bit-for-bit
-  * against the retained Column-HOF formulations they replaced — including
+  * against the Column-HOF formulations they replaced, kept in the test
+  * object [[HofTwins]] — including
   * the awkward edge semantics the kernels must reproduce: split(trim, \s+)
   * with limit -1 (trailing empties KEPT, trim strips 0x20 only), ascii() =
   * signed first UTF-8 byte, codepoint-indexed substr, Long.MaxValue minhash
@@ -43,7 +44,7 @@ class TextKernelSpec extends SparkSpec {
 
   test("shingles kernel == HOF formulation (sizes and content)") {
     val k = edge.select(col("doc_id"), Docs.shingles(col("text"), 3).as("sh"))
-    val h = edge.select(col("doc_id"), Docs.shinglesHof(col("text"), 3).as("sh"))
+    val h = edge.select(col("doc_id"), HofTwins.shingles(col("text"), 3).as("sh"))
     assertSame(k, h, "shingles")
   }
 
@@ -67,12 +68,12 @@ class TextKernelSpec extends SparkSpec {
   }
 
   test("md5 minhash signature kernel == HOF formulation") {
-    assertSame(Docs.minHashMd5Signature(edge), Docs.minHashMd5SignatureHof(edge), "minHashMd5")
+    assertSame(Docs.minHashMd5Signature(edge), HofTwins.minHashMd5Signature(edge), "minHashMd5")
   }
 
   test("simhash kernels == HOF formulations (xxhash64 and md5)") {
-    assertSame(Docs.simHash(edge), Docs.simHashHof(edge), "simHashXx")
-    assertSame(Docs.simHashMd5(edge), Docs.simHashMd5Hof(edge), "simHashMd5")
+    assertSame(Docs.simHash(edge), HofTwins.simHash(edge), "simHashXx")
+    assertSame(Docs.simHashMd5(edge), HofTwins.simHashMd5(edge), "simHashMd5")
   }
 
   test("fingerprint kernels == HOF formulations (wrap and mod-p)") {
@@ -82,8 +83,8 @@ class TextKernelSpec extends SparkSpec {
     // production path that the compiled kernel fixes by actually wrapping
     // (the documented semantics); parity is pinned on the pre-overflow range
     val short = edge.where(length(col("text")) <= 12)
-    assertSame(Docs.fingerprint(short), Docs.fingerprintHof(short), "fingerprintWrap")
-    assertSame(Docs.fingerprintMod(edge), Docs.fingerprintModHof(edge), "fingerprintMod")
+    assertSame(Docs.fingerprint(short), HofTwins.fingerprint(short), "fingerprintWrap")
+    assertSame(Docs.fingerprintMod(edge), HofTwins.fingerprintMod(edge), "fingerprintMod")
   }
 
   test("fingerprint kernel wraps past Long.MaxValue instead of throwing") {
@@ -93,11 +94,11 @@ class TextKernelSpec extends SparkSpec {
     var expect = 0L
     (1 to 64).foreach(_ => expect = expect * 31L + 'x'.toLong)
     assert(fp === expect)
-    intercept[Exception] { Docs.fingerprintHof(long).collect() } // ANSI overflow
+    intercept[Exception] { HofTwins.fingerprint(long).collect() } // ANSI overflow
   }
 
   test("winnow kernel == HOF formulation") {
-    assertSame(Docs.winnowSummary(edge), Docs.winnowSummaryHof(edge), "winnow")
+    assertSame(Docs.winnowSummary(edge), HofTwins.winnowSummary(edge), "winnow")
   }
 
   test("repStats kernel == brute-force token n-gram counting on the edge corpus") {
@@ -195,12 +196,12 @@ class TextKernelSpec extends SparkSpec {
   test("kernels agree with HOF twins on the sf0.001 documents corpus") {
     val docs = graft.sources.Tables.documents(spark, "/root/testdata/sf0.001")
       .select("doc_id", "text")
-    assertSame(Docs.minHashMd5Signature(docs), Docs.minHashMd5SignatureHof(docs), "minHashMd5@sf")
-    assertSame(Docs.simHashMd5(docs), Docs.simHashMd5Hof(docs), "simHashMd5@sf")
-    assertSame(Docs.fingerprintMod(docs), Docs.fingerprintModHof(docs), "fingerprintMod@sf")
-    assertSame(Docs.winnowSummary(docs), Docs.winnowSummaryHof(docs), "winnow@sf")
+    assertSame(Docs.minHashMd5Signature(docs), HofTwins.minHashMd5Signature(docs), "minHashMd5@sf")
+    assertSame(Docs.simHashMd5(docs), HofTwins.simHashMd5(docs), "simHashMd5@sf")
+    assertSame(Docs.fingerprintMod(docs), HofTwins.fingerprintMod(docs), "fingerprintMod@sf")
+    assertSame(Docs.winnowSummary(docs), HofTwins.winnowSummary(docs), "winnow@sf")
     assertSame(
       docs.select(col("doc_id"), Docs.shingles(col("text"), 3).as("sh")),
-      docs.select(col("doc_id"), Docs.shinglesHof(col("text"), 3).as("sh")), "shingles@sf")
+      docs.select(col("doc_id"), HofTwins.shingles(col("text"), 3).as("sh")), "shingles@sf")
   }
 }
