@@ -114,38 +114,6 @@ object Clustering {
   private def isWeekday(ts: Timestamp): Boolean =
     ts.toInstant.atZone(java.time.ZoneOffset.UTC).getDayOfWeek.getValue <= 5 // Mon=1..Fri=5 ⇔ python weekday()<5
 
-  /** estimate_home/work (gps.py:940-999) + the 500 m median-fence relabel
-    * (gps.py:1121-1196): DBSCAN the `pick`ed stationary rows, take the top
-    * cluster; if `accept` holds for its center, each `inFence` row joins
-    * (≤ fence) or leaves by its distance to the members' median. Its rows get
-    * cid `label` and leave the stationary set. Returns (site, remaining).
-    */
-  private def fenceSite(user: Long, eps: Double, minSamples: Int, fence: Double,
-                        cids: mutable.HashMap[Long, String])(
-      stationary: IndexedSeq[EnrichedPoint], label: String)(
-      pick: EnrichedPoint => Boolean, inFence: EnrichedPoint => Boolean,
-      accept: ClusterRow => Boolean): (Option[ClusterRow], IndexedSeq[EnrichedPoint]) = {
-    def at(i: Int) = (stationary(i).lat, stationary(i).lon)
-    val picked = stationary.indices.filter(i => pick(stationary(i)))
-    val labels = Dbscan.run(picked.map(at).toArray, eps, minSamples)
-    Dbscan.topCluster(labels).map { top =>
-      val members = picked.indices.filter(labels(_) == top).map(picked)
-      (centerStats(user, label, members.map(at)), members)
-    } match {
-      case Some((center, members)) if accept(center) =>
-        val mlat = median(members.map(stationary(_).lat))
-        val mlon = median(members.map(stationary(_).lon))
-        val mask = mutable.HashSet.empty[Int] ++ members
-        stationary.indices.filter(i => inFence(stationary(i))).foreach { idx =>
-          val r = stationary(idx)
-          if (haversine(mlat, mlon, r.lat, r.lon) <= fence) mask += idx else mask -= idx
-        }
-        mask.foreach(idx => cids(stationary(idx).event_id) = label)
-        (Some(center), stationary.indices.filterNot(mask).map(stationary))
-      case _ => (None, stationary)
-    }
-  }
-
   /** The full per-user pipeline. Returns (labeled records, cluster rows). */
   def contextForUser(user: Long, rowsIn: Seq[EnrichedPoint],
                      eps: Double, minSamples: Int, fence: Double)
@@ -155,15 +123,44 @@ object Clustering {
       return (rows.map(r => LabeledRecord(r.user_id, r.event_id, r.ts, r.lat, r.lon, r.binning, "xNot", None)), Nil)
 
     val cids = mutable.HashMap.empty[Long, String] // event_id → cid
-    val site = fenceSite(user, eps, minSamples, fence, cids) _
+
+    /** estimate_home/work (gps.py:940-999) + the 500 m median-fence relabel
+      * (gps.py:1121-1196): DBSCAN the `pick`ed stationary rows, take the top
+      * cluster; if `accept` holds for its center, each `inFence` row joins
+      * (≤ fence) or leaves by its distance to the members' median. Its rows get
+      * cid `label` and leave the stationary set. Returns (site, remaining).
+      */
+    def site(stationary: IndexedSeq[EnrichedPoint], label: String,
+             pick: EnrichedPoint => Boolean, inFence: EnrichedPoint => Boolean,
+             accept: ClusterRow => Boolean): (Option[ClusterRow], IndexedSeq[EnrichedPoint]) = {
+      def at(i: Int) = (stationary(i).lat, stationary(i).lon)
+      val picked = stationary.indices.filter(i => pick(stationary(i)))
+      val labels = Dbscan.run(picked.map(at).toArray, eps, minSamples)
+      Dbscan.topCluster(labels).map { top =>
+        val members = picked.indices.filter(labels(_) == top).map(picked)
+        (centerStats(user, label, members.map(at)), members)
+      } match {
+        case Some((center, members)) if accept(center) =>
+          val mlat = median(members.map(stationary(_).lat))
+          val mlon = median(members.map(stationary(_).lon))
+          val mask = mutable.HashSet.empty[Int] ++ members
+          stationary.indices.filter(i => inFence(stationary(i))).foreach { idx =>
+            val r = stationary(idx)
+            if (haversine(mlat, mlon, r.lat, r.lon) <= fence) mask += idx else mask -= idx
+          }
+          mask.foreach(idx => cids(stationary(idx).event_id) = label)
+          (Some(center), stationary.indices.filterNot(mask).map(stationary))
+        case _ => (None, stationary)
+      }
+    }
 
     // --- home (gps.py:1119-1146)
-    val (home, afterHome) = site(rows.filter(_.binning == "stationary").toIndexedSeq, "home")(
+    val (home, afterHome) = site(rows.filter(_.binning == "stationary").toIndexedSeq, "home",
       r => { val h = hourOf(r.ts); (h > 0 && h < 6) || (h > 19 && h < 24) },
       _ => true, _ => true)
 
     // --- work (gps.py:1149-1196)
-    val (workOpt, stationary) = site(afterHome, "work")(
+    val (workOpt, stationary) = site(afterHome, "work",
       r => { val h = hourOf(r.ts); h >= 9 && h <= 17 && isWeekday(r.ts) },
       r => { val h = hourOf(r.ts); h > 7 && h < 20 },
       w => home.forall(h => haversine(w.lat, w.lon, h.lat, h.lon) / 1000.0 <= 161.0))

@@ -19,7 +19,7 @@ one side only, and every query whose normalized plan differs, is reported;
 the exit status is 1 if there is any such query and 0 otherwise.
 
 Usage:
-    python3 tools/plan_diff.py BEFORE_DIR AFTER_DIR [--context N]
+    python3 tools/plan_diff.py BEFORE_DIR AFTER_DIR
 """
 import argparse
 import difflib
@@ -61,8 +61,6 @@ def main():
     ap = argparse.ArgumentParser(description=__doc__.split("\n\n")[0])
     ap.add_argument("before")
     ap.add_argument("after")
-    ap.add_argument("--context", type=int, default=2,
-                    help="lines of context around each difference (default 2)")
     args = ap.parse_args()
 
     before, after = load(args.before), load(args.after)
@@ -79,7 +77,7 @@ def main():
             sys.stdout.writelines(difflib.unified_diff(
                 before[key].splitlines(keepends=True),
                 after[key].splitlines(keepends=True),
-                fromfile=f"before/{key}", tofile=f"after/{key}", n=args.context))
+                fromfile=f"before/{key}", tofile=f"after/{key}", n=2))
             bad += 1
         else:
             same += 1
